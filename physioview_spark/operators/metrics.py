@@ -21,35 +21,85 @@ collect, scales per-subject to arbitrary cohort sizes. Only beat rows (a few
 per second) enter the window stages; the dense sample frame is scanned once
 and immediately collapsed map-side to a per-(subject, segment) aggregate
 that feeds both the segment spine and the timestamp column.
+
+Construction cost: every projection, aggregate and window is built from
+SQL expression strings (``selectExpr`` / ``F.expr``), not Column trees.
+Each Column node costs py4j round trips to the driver JVM
+(``F.col("a")`` alone is 13, ``F.col("a") + 1`` is 24) while an
+expression string of any size costs 1-3, and the optimized plans are
+the same.
 """
+
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 B = "subject_id"
 
 
-def _sdiv(num, den) -> Column:
+def _d(x: float) -> str:
+    """SQL DOUBLE literal (a bare ``1.5`` is DECIMAL in Spark SQL)."""
+    return f"{float(x)!r}D"
+
+
+def _sdiv(num: str, den: str) -> str:
     """ANSI-safe division (null on zero denominator)."""
-    return num / F.nullif(den, F.lit(0))
+    return f"({num}) / nullif({den}, 0)"
 
 
+def _pct(num: str, den: str) -> str:
+    return f"round({_sdiv(num, den)} * 100.0D, 2)"
 
-def _arr_median(arr: Column) -> Column:
-    """Exact median of a (null-free) array column; null for empty arrays.
+
+def _segment(seg_len: int) -> str:
+    return f"CAST(floor(sample_idx / {seg_len}) + 1 AS BIGINT)"
+
+
+def _over(*keys: str, order: str, frame: str = "") -> str:
+    return f"OVER (PARTITION BY {', '.join(keys)} ORDER BY {order} {frame})"
+
+
+RUNNING = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+
+
+def _with(df: DataFrame, **exprs: str) -> DataFrame:
+    """``withColumn`` over SQL expression strings, as ONE projection: a
+    named column is replaced in place, a new one is appended."""
+    cols = df.columns
+    keep = [f"{exprs[c]} AS {c}" if c in exprs else c for c in cols]
+    new = [f"{e} AS {c}" for c, e in exprs.items() if c not in cols]
+    if keep == cols:
+        keep = ["*"]
+    return df.selectExpr(*keep, *new)
+
+
+def _agg(df: DataFrame, keys: list[str], aggs: list[str]) -> DataFrame:
+    """``groupBy(keys).agg(aggs)`` over SQL expression strings."""
+    return df.groupBy(*map(F.expr, keys)).agg(*map(F.expr, aggs))
+
+
+def _arr_median(arr: str) -> str:
+    """Exact median of a (null-free) array expression; null for empty
+    arrays.
 
     Spark disallows ``median`` over framed windows, so sliding medians are
     ``collect_list`` over the frame (nulls dropped) + this expression."""
-    n = F.size(arr)
-    srt = F.sort_array(arr)
-    mid = F.element_at(srt, (n / 2 + 1).cast("int"))
-    lo = F.element_at(srt, (n / 2).cast("int"))
+    n, srt = f"size({arr})", f"sort_array({arr})"
     return (
-        F.when(n == 0, F.lit(None).cast("double"))
-        .when(n % 2 == 1, F.element_at(srt, ((n + 1) / 2).cast("int")))
-        .otherwise((lo + mid) / 2.0)
+        f"CASE WHEN {n} = 0 THEN CAST(NULL AS DOUBLE) "
+        f"WHEN {n} % 2 = 1 THEN element_at({srt}, CAST(({n} + 1) / 2 AS INT)) "
+        f"ELSE (element_at({srt}, CAST({n} / 2 AS INT)) "
+        f"+ element_at({srt}, CAST({n} / 2 + 1 AS INT))) / 2.0D END"
     )
+
+
+def _invalid(min_hr: float, seg_size: int) -> str:
+    """Invalid: fewer detected beats than ``min_hr`` implies for the
+    segment, or more than 220 (reference: pipeline/SQA.py:193-196)."""
+    lo = int(min_hr * (seg_size / 60.0))
+    return (f"CAST(CASE WHEN n_detected < {lo} OR n_detected > 220 "
+            "THEN 1 END AS INT)")
 
 
 def _seg_samples(
@@ -84,17 +134,14 @@ def _seg_samples(
     query).
     """
     seg_len = int(fs * seg_size)
-    aggs = [F.max("sample_idx").alias("seg_max_idx")]
+    aggs = ["max(sample_idx) AS seg_max_idx"]
     if with_ts:
         # ts is monotone in sample_idx, so min(ts) = first-sample ts
-        aggs.append(F.min("ts").alias("ts"))
+        aggs.append("min(ts) AS ts")
     if with_artifacts:
         aggs.append(
-            F.sum(F.when(F.col("artifact") == 1, 1).otherwise(0))
-            .alias("n_artifact")
-        )
-    seg = (F.floor(F.col("sample_idx") / seg_len) + 1).cast("long").alias("segment")
-    out = samples.groupBy(B, seg).agg(*aggs)
+            "sum(CASE WHEN artifact = 1 THEN 1 ELSE 0 END) AS n_artifact")
+    out = _agg(samples, [B, f"{_segment(seg_len)} AS segment"], aggs)
     # Downstream references prune different columns (spine wants
     # seg_max_idx, the ts join wants ts, compute_metrics wants
     # n_artifact), which defeats ReuseExchange — without a persist each
@@ -115,35 +162,24 @@ def _segment_spine(seg_samples: DataFrame, seg_len: int) -> DataFrame:
     caller passes a sparse one; reads the tiny per-segment aggregate
     instead of re-scanning the sample frame.
     """
-    return (
-        seg_samples.groupBy(B)
-        .agg((F.max("seg_max_idx") + 1).alias("n_samples"))
-        .withColumn("n_seg", F.ceil(F.col("n_samples") / seg_len))
-        .withColumn("segment", F.explode(F.sequence(F.lit(1), F.col("n_seg"))))
-        .withColumn(
-            "seg_n_samples",
-            F.least(F.col("n_samples"), F.col("segment") * seg_len).cast("long")
-            - ((F.col("segment") - 1) * seg_len),
-        )
-        .select(B, "segment", "n_seg", "seg_n_samples")
-    )
+    spine = _agg(seg_samples, [B], ["max(seg_max_idx) + 1 AS n_samples"])
+    spine = _with(spine, n_seg=f"ceil(n_samples / {seg_len})")
+    spine = _with(spine, segment="explode(sequence(1, n_seg))")
+    return spine.selectExpr(
+        B, "segment", "n_seg",
+        f"CAST(least(n_samples, segment * {seg_len}) AS BIGINT)"
+        f" - (segment - 1) * {seg_len} AS seg_n_samples")
 
 
 def _beats_frame(samples: DataFrame, fs: float, seg_size: int) -> DataFrame:
     """Sparse beat rows with segment id, IBI (lag diff) and artifact flag."""
     seg_len = int(fs * seg_size)
-    w = Window.partitionBy(B).orderBy("sample_idx")
-    return (
-        samples.where(F.col("beat") == 1)
-        .select(B, "sample_idx", "artifact")
-        .withColumn(
-            "ibi_ms",
-            (F.col("sample_idx") - F.lag("sample_idx").over(w)) / F.lit(fs) * 1000.0,
-        )
-        .withColumn(
-            "segment", (F.floor(F.col("sample_idx") / seg_len) + 1).cast("long")
-        )
-    )
+    beats = samples.where("beat = 1").selectExpr(B, "sample_idx", "artifact")
+    beats = _with(
+        beats,
+        ibi_ms=f"(sample_idx - lag(sample_idx) {_over(B, order='sample_idx')})"
+               f" / {_d(fs)} * 1000.0D")
+    return _with(beats, segment=_segment(seg_len))
 
 
 def get_artifacts(
@@ -155,22 +191,18 @@ def get_artifacts(
     column uses ``min(ts)`` because ts is monotone in sample_idx.
     """
     seg_len = int(fs * seg_size)
-    seg = (F.floor(F.col("sample_idx") / seg_len) + 1).cast("long").alias("segment")
     aggs = [
-        F.sum(F.when(F.col("beat") == 1, 1).otherwise(0)).alias("n_detected"),
-        F.sum(F.when(F.col("artifact") == 1, 1).otherwise(0)).alias("n_artifact"),
+        "sum(CASE WHEN beat = 1 THEN 1 ELSE 0 END) AS n_detected",
+        "sum(CASE WHEN artifact = 1 THEN 1 ELSE 0 END) AS n_artifact",
     ]
     if with_ts:
-        aggs.append(F.min("ts").alias("ts"))
-    out = samples.groupBy(B, seg).agg(*aggs)
-    out = out.withColumn(
-        "pct_artifact",
-        F.round(_sdiv(F.col("n_artifact"), F.col("n_detected")) * 100.0, 2),
-    )
+        aggs.append("min(ts) AS ts")
+    out = _agg(samples, [B, f"{_segment(seg_len)} AS segment"], aggs)
+    out = _with(out, pct_artifact=_pct("n_artifact", "n_detected"))
     cols = [B, "segment"] + (["ts"] if with_ts else []) + [
         "n_detected", "n_artifact", "pct_artifact"
     ]
-    return out.select(*cols)
+    return out.selectExpr(*cols)
 
 
 def _windowed_beats(
@@ -188,20 +220,16 @@ def _windowed_beats(
     than filtering, so callers can aggregate window medians AND raw beat
     counts in the same pass (one shuffle on ``(subject, keys)``).
     """
-    w = (
-        Window.partitionBy(B, *keys)
-        .orderBy("sample_idx")
-        .rowsBetween(0, win_size - 1)
-    )
-    return (
-        beats.withColumn("__n", F.count(F.lit(1)).over(w))
-        .withColumn("__any_art", F.max(F.col("artifact") == 1).over(w))
-        .withColumn("med_hr", _arr_median(F.collect_list(_sdiv(F.lit(60000.0), F.col("ibi_ms"))).over(w)))
-        .withColumn(
-            "__valid",
-            (F.col("__n") == win_size) & ~F.coalesce("__any_art", F.lit(False)),
-        )
-    )
+    w = _over(B, *keys, order="sample_idx",
+              frame=f"ROWS BETWEEN CURRENT ROW AND {win_size - 1} FOLLOWING")
+    # one projection per window column keeps the three Window operators
+    # of the Column-tree form (one merged operator is a different plan)
+    wb = _with(beats, __n=f"count(1) {w}")
+    wb = _with(wb, __any_art=f"max(artifact = 1) {w}")
+    wb = _with(wb, med_hr=_arr_median(
+        f"collect_list({_sdiv(_d(60000.0), 'ibi_ms')}) {w}"))
+    return _with(
+        wb, __valid=f"__n = {win_size} AND NOT coalesce(__any_art, false)")
 
 
 def get_missing(
@@ -260,34 +288,25 @@ def get_missing(
     # so the clamp is unobservable. That shift contract is what makes
     # the join-free form exact.
     k = int(seg_size * 0.5)
-    tagged = beats.withColumn(
-        "tag",
-        F.explode(F.array_compact(F.array(
-            F.lit(0),
-            F.when(
-                F.col("sample_idx") >= F.col("segment") * seg_len - k,
-                F.lit(1)),
-            F.when(
-                F.col("sample_idx") < (F.col("segment") - 1) * seg_len + k,
-                F.lit(2)),
-        ))),
-    )
+    tagged = _with(beats, tag=(
+        "explode(array_compact(array(0, "
+        f"CASE WHEN sample_idx >= segment * {seg_len} - {k} THEN 1 END, "
+        f"CASE WHEN sample_idx < (segment - 1) * {seg_len} + {k} THEN 2 END"
+        ")))"))
     wb = _windowed_beats(tagged, keys=("segment", "tag"))
-    v = F.col("__valid")
-    t0, t1, t2 = (F.col("tag") == i for i in (0, 1, 2))
-    target = (
-        F.col("segment")
-        + F.when(t1, 1).when(t2, -1).otherwise(0)
-    ).alias("segment")
-    seg_agg = wb.groupBy(B, target).agg(
-        F.median(F.when(v & t0, F.col("med_hr"))).alias("seg_med"),
-        F.count(F.when(v & t0, F.lit(1))).alias("seg_n_win"),
-        F.count(F.when(t0, F.lit(1))).alias("n_detected"),
-        F.median(F.when(v & t1, F.col("med_hr"))).alias("last_half_med"),
-        F.count(F.when(v & t1, F.lit(1))).alias("last_half_n"),
-        F.median(F.when(v & t2, F.col("med_hr"))).alias("first_half_med"),
-        F.count(F.when(v & t2, F.lit(1))).alias("first_half_n"),
-    )
+    target = ("segment + CASE WHEN tag = 1 THEN 1 WHEN tag = 2 THEN -1 "
+              "ELSE 0 END AS segment")
+    seg_agg = _agg(wb, [B, target], [
+        "median(CASE WHEN __valid AND tag = 0 THEN med_hr END) AS seg_med",
+        "count(CASE WHEN __valid AND tag = 0 THEN 1 END) AS seg_n_win",
+        "count(CASE WHEN tag = 0 THEN 1 END) AS n_detected",
+        "median(CASE WHEN __valid AND tag = 1 THEN med_hr END)"
+        " AS last_half_med",
+        "count(CASE WHEN __valid AND tag = 1 THEN 1 END) AS last_half_n",
+        "median(CASE WHEN __valid AND tag = 2 THEN med_hr END)"
+        " AS first_half_med",
+        "count(CASE WHEN __valid AND tag = 2 THEN 1 END) AS first_half_n",
+    ])
 
     m = (
         # JOIN CONTRACT (load-bearing): seg_agg contains out-of-spine
@@ -298,38 +317,27 @@ def get_missing(
         # type or the spine's coverage ever changes, add an explicit
         # ``target BETWEEN 1 AND n_seg`` filter on seg_agg first.
         spine.join(seg_agg, [B, "segment"], "left")
-        .withColumn("n_detected", F.coalesce("n_detected", F.lit(0)))
     )
     # Fallback chain: own windows > prev-half windows > next-half windows;
     # "windows existed" (count > 0) gates each stage even if the median is
     # null (reference: SQA.py:561-572).
-    m = m.withColumn(
-        "exp_hr_raw",
-        F.when(F.coalesce("seg_n_win", F.lit(0)) > 0, F.col("seg_med"))
-        .when(F.coalesce("last_half_n", F.lit(0)) > 0, F.col("last_half_med"))
-        .when(F.coalesce("first_half_n", F.lit(0)) > 0, F.col("first_half_med")),
-    )
-    w_carry = (
-        Window.partitionBy(B).orderBy("segment")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    m = m.withColumn("exp_hr", F.last("exp_hr_raw", ignorenulls=True).over(w_carry))
-    m = m.withColumn(
-        "n_expected_f",
-        F.round(F.col("exp_hr") * (F.lit(seg_size) / 60.0)).cast("double"),
-    )
+    m = _with(
+        m,
+        n_detected="coalesce(n_detected, 0)",
+        exp_hr_raw=(
+            "CASE WHEN coalesce(seg_n_win, 0) > 0 THEN seg_med"
+            " WHEN coalesce(last_half_n, 0) > 0 THEN last_half_med"
+            " WHEN coalesce(first_half_n, 0) > 0 THEN first_half_med END"))
+    m = _with(m, exp_hr="last(exp_hr_raw, true) "
+                        + _over(B, order="segment", frame=RUNNING))
+    m = _with(m, n_expected_f=(
+        f"CAST(round(exp_hr * ({seg_size} / 60.0D)) AS DOUBLE)"))
     # Last partial segment: rescale by actual/nominal duration
     # (reference: SQA.py:597-600).
-    m = m.withColumn(
-        "n_expected_f",
-        F.when(
-            F.col("segment") == F.col("n_seg"),
-            F.round(
-                F.col("n_expected_f")
-                * (F.col("seg_n_samples") / F.lit(fs) / F.lit(seg_size))
-            ),
-        ).otherwise(F.col("n_expected_f")),
-    )
+    m = _with(m, n_expected_f=(
+        "CASE WHEN segment = n_seg THEN round(n_expected_f"
+        f" * (seg_n_samples / {_d(fs)} / {seg_size}))"
+        " ELSE n_expected_f END"))
     # Leading backfill as a RUNNING frame over the reversed order:
     # first(ignorenulls) over [current, unbounded following] makes Spark's
     # WindowExec re-scan the tail for every row — O(n^2) per subject
@@ -338,28 +346,19 @@ def get_missing(
     # [unbounded preceding, current] is the incremental running frame,
     # O(n). Identical values: segment is unique per subject, so the
     # reversed order has no ties.
-    w_backfill = (
-        Window.partitionBy(B).orderBy(F.desc("segment"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    m = m.withColumn(
-        "n_expected",
-        F.last("n_expected_f", ignorenulls=True).over(w_backfill).cast("long"),
-    )
-    m = m.withColumn(
-        "n_missing",
-        F.greatest(F.lit(0), F.col("n_expected") - F.col("n_detected")),
-    ).withColumn(
-        "pct_missing",
-        F.round(_sdiv(F.col("n_missing"), F.col("n_expected")) * 100.0, 2),
-    )
+    m = _with(m, n_expected=(
+        "CAST(last(n_expected_f, true) "
+        f"{_over(B, order='segment DESC', frame=RUNNING)} AS BIGINT)"))
+    m = _with(m, n_missing="greatest(0, n_expected - n_detected)")
+    m = _with(m, pct_missing=_pct("n_missing", "n_expected"))
     cols = [B, "segment", "n_detected", "n_expected", "n_missing", "pct_missing"]
     if with_ts:
         # first-sample ts per segment rides the SAME _seg_samples pass
         # that built the spine — no second scan of the sample frame
-        m = m.join(seg_samples.select(B, "segment", "ts"), [B, "segment"], "left")
+        m = m.join(seg_samples.selectExpr(B, "segment", "ts"),
+                   [B, "segment"], "left")
         cols = [B, "segment", "ts"] + cols[2:]
-    return m.select(*cols)
+    return m.selectExpr(*cols)
 
 
 def compute_metrics(
@@ -387,20 +386,9 @@ def compute_metrics(
         samples, fs, seg_size, with_ts=with_ts, seg_samples=ss
     )
     out = missing.join(
-        ss.select(B, "segment", "n_artifact"), [B, "segment"], "left"
-    ).withColumn(
-        "pct_artifact",
-        F.round(_sdiv(F.col("n_artifact"), F.col("n_detected")) * 100.0, 2),
-    )
-    out = out.withColumn(
-        "invalid",
-        F.when(
-            (F.col("n_detected") < int(min_hr * (seg_size / 60.0)))
-            | (F.col("n_detected") > 220),
-            1,
-        ).cast("int"),
-    )
-    return out
+        ss.selectExpr(B, "segment", "n_artifact"), [B, "segment"], "left")
+    return _with(out, pct_artifact=_pct("n_artifact", "n_detected"),
+                 invalid=_invalid(min_hr, seg_size))
 
 
 def compute_metrics_rolling(
@@ -424,11 +412,12 @@ def compute_metrics_rolling(
     step_len = int(fs * rolling_step)
     win_len = int(fs * rolling_window)
     beats = _beats_frame(samples, fs, seg_size).drop("segment")
-    extents = samples.groupBy(B).agg(
+    extents = _agg(samples, [B], [
         # grid length from the index (see _segment_spine)
-        (F.max("sample_idx") + 1).alias("n_samples"),
-        *([F.min("ts").alias("__ts0")] if with_ts else []),
-    ).withColumn("n_win", F.ceil(F.col("n_samples") / step_len))
+        "max(sample_idx) + 1 AS n_samples",
+        *(["min(ts) AS __ts0"] if with_ts else []),
+    ])
+    extents = _with(extents, n_win=f"ceil(n_samples / {step_len})")
     # referenced by both the fan-out join and the window spine, with
     # different column prunings — persist so the full sample frame is
     # scanned once for the per-subject extents (one row per subject).
@@ -440,97 +429,61 @@ def compute_metrics_rolling(
     extents = cache.pin(extents)
 
     # windows containing sample i: s in [ceil((i-win_len+1)/step), floor(i/step)]
-    lo = F.greatest(
-        F.lit(0), F.ceil((F.col("sample_idx") - win_len + 1) / F.lit(step_len))
-    )
-    hi = F.floor(F.col("sample_idx") / F.lit(step_len))
-    exploded = (
-        beats.join(extents.select(B, "n_win"), B)
-        .withColumn("mw", F.explode(F.sequence(lo, F.least(hi, F.col("n_win") - 1))))
-        .withColumn("win_start", F.col("mw") * step_len)
-    )
+    lo = f"greatest(0, ceil((sample_idx - {win_len} + 1) / {step_len}))"
+    hi = f"floor(sample_idx / {step_len})"
+    exploded = _with(
+        beats.join(extents.selectExpr(B, "n_win"), B),
+        mw=f"explode(sequence({lo}, least({hi}, n_win - 1)))")
 
-    w5 = Window.partitionBy(B, "mw").orderBy("sample_idx").rowsBetween(0, 4)
+    w5 = _over(B, "mw", order="sample_idx",
+               frame="ROWS BETWEEN CURRENT ROW AND 4 FOLLOWING")
     # an IBI is only in-window if the previous beat is also in the window
-    wprev = Window.partitionBy(B, "mw").orderBy("sample_idx")
+    wprev = _over(B, "mw", order="sample_idx")
     # window medians AND raw counts in ONE aggregation over the exploded
     # frame (one shuffle on (subject, mw) instead of two + a join):
     # ``__valid`` masks invalid windows out of the median / window count
     # while every exploded row still feeds n_detected / n_artifact
-    meds = (
-        exploded.withColumn("__rn", F.row_number().over(wprev))
-        .withColumn("ibi_in", F.when(F.col("__rn") > 1, F.col("ibi_ms")))
-        .withColumn("__n", F.count(F.lit(1)).over(w5))
-        .withColumn("__any_art", F.max(F.col("artifact") == 1).over(w5))
-        .withColumn("med_hr", _arr_median(F.collect_list(_sdiv(F.lit(60000.0), F.col("ibi_in"))).over(w5)))
-        .withColumn(
-            "__valid",
-            (F.col("__n") == 5) & ~F.coalesce("__any_art", F.lit(False)),
-        )
-    )
-    win_meds = meds.groupBy(B, "mw").agg(
-        F.median(F.when(F.col("__valid"), F.col("med_hr"))).alias("win_med"),
-        F.count(F.when(F.col("__valid"), F.lit(1))).alias("n_win5"),
-        F.count(F.lit(1)).alias("n_detected"),
-        F.sum(F.when(F.col("artifact") == 1, 1).otherwise(0)).alias("n_artifact"),
-    )
-    spine = extents.withColumn(
-        "mw", F.explode(F.sequence(F.lit(0), F.col("n_win") - 1))
-    ).select(B, "mw", *(["__ts0"] if with_ts else []))
+    meds = _with(exploded, __rn=f"row_number() {wprev}")
+    meds = _with(meds, ibi_in="CASE WHEN __rn > 1 THEN ibi_ms END")
+    meds = _with(meds, __n=f"count(1) {w5}")
+    meds = _with(meds, __any_art=f"max(artifact = 1) {w5}")
+    meds = _with(meds, med_hr=_arr_median(
+        f"collect_list({_sdiv(_d(60000.0), 'ibi_in')}) {w5}"))
+    meds = _with(meds, __valid="__n = 5 AND NOT coalesce(__any_art, false)")
+    win_meds = _agg(meds, [B, "mw"], [
+        "median(CASE WHEN __valid THEN med_hr END) AS win_med",
+        "count(CASE WHEN __valid THEN 1 END) AS n_win5",
+        "count(1) AS n_detected",
+        "sum(CASE WHEN artifact = 1 THEN 1 ELSE 0 END) AS n_artifact",
+    ])
+    spine = _with(extents, mw="explode(sequence(0, n_win - 1))").selectExpr(
+        B, "mw", *(["__ts0"] if with_ts else []))
 
-    m = (
-        spine.join(win_meds, [B, "mw"], "left")
-        .withColumn("n_detected", F.coalesce("n_detected", F.lit(0)))
-        .withColumn("n_artifact", F.coalesce("n_artifact", F.lit(0)))
-        .withColumn(
-            "exp_hr_raw",
-            F.when(F.coalesce("n_win5", F.lit(0)) > 0, F.col("win_med")),
-        )
-    )
-    w_carry = (
-        Window.partitionBy(B).orderBy("mw")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    m = (
-        m.withColumn("exp_hr", F.last("exp_hr_raw", ignorenulls=True).over(w_carry))
-        .withColumn(
-            "n_expected",
-            F.round(F.col("exp_hr") * (F.lit(rolling_window) / 60.0)).cast("long"),
-        )
-        .withColumn(
-            "n_missing",
-            F.greatest(F.lit(0), F.col("n_expected") - F.col("n_detected")),
-        )
-        .withColumn(
-            "pct_missing",
-            F.round(_sdiv(F.col("n_missing"), F.col("n_expected")) * 100.0, 2),
-        )
-        .withColumn(
-            "pct_artifact",
-            F.when(
-                F.col("n_detected") > 0,
-                F.round(_sdiv(F.col("n_artifact"), F.col("n_detected")) * 100.0, 2),
-            ),
-        )
-        .withColumn("moving_window", F.col("mw") + 1)
-        .withColumn(
-            "invalid",
-            F.when(
-                (F.col("n_detected") < int(min_hr * (seg_size / 60.0)))
-                | (F.col("n_detected") > 220),
-                1,
-            ).cast("int"),
-        )
-    )
+    m = _with(
+        spine.join(win_meds, [B, "mw"], "left"),
+        n_detected="coalesce(n_detected, 0)",
+        n_artifact="coalesce(n_artifact, 0)",
+        exp_hr_raw="CASE WHEN coalesce(n_win5, 0) > 0 THEN win_med END")
+    m = _with(m, exp_hr="last(exp_hr_raw, true) "
+                        + _over(B, order="mw", frame=RUNNING))
+    m = _with(m, n_expected=(
+        f"CAST(round(exp_hr * ({rolling_window} / 60.0D)) AS BIGINT)"))
+    m = _with(m, n_missing="greatest(0, n_expected - n_detected)")
+    m = _with(
+        m,
+        pct_missing=_pct("n_missing", "n_expected"),
+        pct_artifact=(f"CASE WHEN n_detected > 0 THEN "
+                      f"{_pct('n_artifact', 'n_detected')} END"),
+        moving_window="mw + 1",
+        invalid=_invalid(min_hr, seg_size))
     cols = [B, "moving_window", "n_expected", "n_detected", "n_missing",
             "pct_missing", "n_artifact", "pct_artifact", "invalid"]
     if with_ts:
-        ts = samples.groupBy(
-            B, F.floor(F.col("sample_idx") / step_len).alias("mw")
-        ).agg(F.min("ts").alias("ts"))
+        ts = _agg(samples, [B, f"floor(sample_idx / {step_len}) AS mw"],
+                  ["min(ts) AS ts"])
         m = m.join(ts, [B, "mw"], "left")
         cols = [B, "moving_window", "ts"] + cols[2:]
-    return m.select(*cols)
+    return m.selectExpr(*cols)
 
 
 def get_seconds(samples: DataFrame, fs: float, with_ts: bool = True) -> DataFrame:
@@ -549,68 +502,54 @@ def get_seconds(samples: DataFrame, fs: float, with_ts: bool = True) -> DataFram
     the beats fan-out shuffles once.
     """
     fs_i = int(fs)
-    w = Window.partitionBy(B).orderBy("sample_idx")
-    beats = (
-        samples.where(F.col("beat") == 1)
-        .select(B, "sample_idx")
-        .withColumn(
-            "ibi_ms",
-            (F.col("sample_idx") - F.lag("sample_idx").over(w)) / F.lit(fs) * 1000.0,
-        )
-        .withColumn("prev_idx", F.lag("sample_idx").over(w))
-        .withColumn("sec", F.floor(F.col("sample_idx") / fs_i))
-    )
-    sec_aggs = [F.max("sample_idx").alias("sec_max_idx")]
+    lag = f"lag(sample_idx) {_over(B, order='sample_idx')}"
+    beats = _with(
+        samples.where("beat = 1").selectExpr(B, "sample_idx"),
+        ibi_ms=f"(sample_idx - {lag}) / {_d(fs)} * 1000.0D",
+        prev_idx=lag)
+    beats = _with(beats, sec=f"floor(sample_idx / {fs_i})")
+    sec_aggs = ["max(sample_idx) AS sec_max_idx"]
     if with_ts:
-        sec_aggs.append(F.min("ts").alias("ts"))
-    sec_samples = samples.groupBy(
-        B, F.floor(F.col("sample_idx") / fs_i).alias("sec")
-    ).agg(*sec_aggs)
+        sec_aggs.append("min(ts) AS ts")
+    sec_samples = _agg(samples, [B, f"floor(sample_idx / {fs_i}) AS sec"],
+                       sec_aggs)
     if with_ts:
         # Persist lifecycle: pinned via physioview_spark.cache (scope
         # or release_pinned, else GC) — see the _seg_samples docstring.
         from physioview_spark import cache
 
         sec_samples = cache.pin(sec_samples)
-    spine = (
-        sec_samples.groupBy(B)
-        # grid length from the index (see _segment_spine)
-        .agg((F.max("sec_max_idx") + 1).alias("n_samples"))
-        .withColumn("n_sec", F.ceil(F.col("n_samples") / fs_i))
-        .withColumn("sec", F.explode(F.sequence(F.lit(0), F.col("n_sec") - 1)))
-        .select(B, "sec")
-    )
+    # grid length from the index (see _segment_spine)
+    spine = _agg(sec_samples, [B], ["max(sec_max_idx) + 1 AS n_samples"])
+    spine = _with(spine, n_sec=f"ceil(n_samples / {fs_i})")
+    spine = _with(spine, sec="explode(sequence(0, n_sec - 1))")
+    spine = spine.selectExpr(B, "sec")
     # each beat serves windows {sec, sec+1}; window s spans seconds {s-1, s}
-    exploded = beats.withColumn(
-        "wsec", F.explode(F.array(F.col("sec"), F.col("sec") + 1))
-    ).withColumn("win_start_idx", F.greatest(F.lit(0), (F.col("wsec") - 1) * fs_i))
-    window_stats = (
-        exploded.withColumn(
-            "ibi_in",
-            F.when(F.col("prev_idx") >= F.col("win_start_idx"), F.col("ibi_ms")),
-        )
-        # A beat appears in the exploded frame exactly once at its OWN
-        # second; materialize that mask before the groupBy — inside the
-        # agg, "sec" would collide with the `wsec AS sec` grouping alias
-        # and correctness would hinge on child-column resolution order.
-        .withColumn("own_sec", F.col("wsec") == F.col("sec"))
-        .groupBy(B, F.col("wsec").alias("sec"))
-        .agg(
-            F.avg("ibi_in").alias("mean_ibi"),
-            F.count(F.when(F.col("own_sec"), F.lit(1))).alias("n_beats"),
-        )
-    )
-    out = (
-        spine.join(window_stats, [B, "sec"], "left")
-        .withColumn("n_beats", F.coalesce("n_beats", F.lit(0)))
-        .withColumn("mean_hr", _sdiv(F.lit(60000.0), F.col("mean_ibi")))
-        .withColumn("second", F.col("sec") + 1)
-    )
+    exploded = _with(beats, wsec="explode(array(sec, sec + 1))")
+    exploded = _with(
+        exploded, win_start_idx=f"greatest(0, (wsec - 1) * {fs_i})")
+    exploded = _with(
+        exploded, ibi_in="CASE WHEN prev_idx >= win_start_idx THEN ibi_ms END")
+    # A beat appears in the exploded frame exactly once at its OWN
+    # second; materialize that mask before the groupBy — inside the
+    # agg, "sec" would collide with the `wsec AS sec` grouping alias
+    # and correctness would hinge on child-column resolution order.
+    exploded = _with(exploded, own_sec="wsec = sec")
+    window_stats = _agg(exploded, [B, "wsec AS sec"], [
+        "avg(ibi_in) AS mean_ibi",
+        "count(CASE WHEN own_sec THEN 1 END) AS n_beats",
+    ])
+    out = _with(
+        spine.join(window_stats, [B, "sec"], "left"),
+        n_beats="coalesce(n_beats, 0)",
+        mean_hr=_sdiv(_d(60000.0), "mean_ibi"),
+        second="sec + 1")
     cols = [B, "second", "mean_hr", "mean_ibi", "n_beats"]
     if with_ts:
-        out = out.join(sec_samples.select(B, "sec", "ts"), [B, "sec"], "left")
+        out = out.join(sec_samples.selectExpr(B, "sec", "ts"),
+                       [B, "sec"], "left")
         cols = [B, "second", "ts", "mean_hr", "mean_ibi", "n_beats"]
-    return out.select(*cols)
+    return out.selectExpr(*cols)
 
 
 def cardiac_summary(metrics: DataFrame) -> DataFrame:
@@ -618,15 +557,13 @@ def cardiac_summary(metrics: DataFrame) -> DataFrame:
     (reference: dashboard/utils.py:584-631) — per subject: segment count,
     mean detected beats, segments with any missing / any artifact /
     invalid, and mean percentages. One tiny hash aggregation."""
-    return metrics.groupBy(B).agg(
-        F.count(F.lit(1)).alias("n_segments"),
-        F.round(F.avg("n_detected"), 2).alias("avg_n_detected"),
-        F.sum(F.when(F.col("n_missing") > 0, 1).otherwise(0))
-        .alias("segs_with_missing"),
-        F.sum(F.when(F.col("n_artifact") > 0, 1).otherwise(0))
-        .alias("segs_with_artifact"),
-        F.sum(F.when(F.col("invalid") == 1, 1).otherwise(0))
-        .alias("segs_invalid"),
-        F.round(F.avg("pct_missing"), 2).alias("avg_pct_missing"),
-        F.round(F.avg("pct_artifact"), 2).alias("avg_pct_artifact"),
-    )
+    return _agg(metrics, [B], [
+        "count(1) AS n_segments",
+        "round(avg(n_detected), 2) AS avg_n_detected",
+        "sum(CASE WHEN n_missing > 0 THEN 1 ELSE 0 END) AS segs_with_missing",
+        "sum(CASE WHEN n_artifact > 0 THEN 1 ELSE 0 END)"
+        " AS segs_with_artifact",
+        "sum(CASE WHEN invalid = 1 THEN 1 ELSE 0 END) AS segs_invalid",
+        "round(avg(pct_missing), 2) AS avg_pct_missing",
+        "round(avg(pct_artifact), 2) AS avg_pct_artifact",
+    ])

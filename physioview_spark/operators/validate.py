@@ -207,13 +207,20 @@ def profile_diff(
         F.col("n_distinct_approx").alias("__and"),
         F.col("mean").alias("__amean"))
     j = b.join(a, "column", "full_outer")
+    # A before-stddev within 1e-12 of the mean's magnitude (absolute
+    # floor 1e-12) is a constant column: merging partial aggregates
+    # across partitions leaves ULP scatter (3.16e-16 on a constant
+    # column at 4 partitions) where one partition gives exactly 0.
+    bsd = F.col("__bsd")
+    constant = bsd.isNull() | (bsd <= F.greatest(
+        F.abs(F.col("__bmean")) * 1e-12, F.lit(1e-12)))
     null_delta = F.round(F.col("__anull") - F.col("__bnull"), 6)
     dist_delta = F.round(
         (F.col("__and") - F.col("__bnd"))
         / F.greatest(F.col("__bnd"), F.lit(1)).cast("double"), 6)
     mean_shift = F.round(
         (F.col("__amean") - F.col("__bmean"))
-        / F.when(F.col("__bsd") > 0, F.col("__bsd")), 6)
+        / F.when(~constant, bsd), 6)
     flags = F.array_join(F.array_compact(F.array(
         F.when(F.col("__bdt").isNull(), F.lit("appeared")),
         F.when(F.col("__adt").isNull(), F.lit("vanished")),
@@ -223,14 +230,14 @@ def profile_diff(
         F.when(F.abs(null_delta) > null_rate_tol, F.lit("null_rate")),
         F.when(F.abs(dist_delta) > distinct_rel_tol, F.lit("distinct")),
         F.when(F.abs(mean_shift) > mean_sd_tol, F.lit("mean_shift")),
-        # mean_shift_sds is NULL when before-stddev is 0/NULL (constant
-        # or all-null numeric column), so a location drift there would
+        # mean_shift_sds is NULL when the before column is constant (or
+        # all-null numeric), so a location drift there would
         # otherwise pass silently — flag it unscaled instead. The
         # comparison carries a tiny tolerance (1e-9 relative with a
         # 1e-12 absolute floor): a zero-stddev column can still show
         # ULP-level mean scatter from aggregation order on a
         # near-constant column, which is noise, not drift.
-        F.when((F.col("__bsd").isNull() | (F.col("__bsd") <= 0))
+        F.when(constant
                & F.col("__bmean").isNotNull()
                & F.col("__amean").isNotNull()
                & (F.abs(F.col("__amean") - F.col("__bmean"))

@@ -4,13 +4,17 @@ library call.
 
 A ``PipelineConfig`` (config.py, JSON-parity with the reference's saved
 parameter files) drives ingest → kernel annotation → IBI → metric
-frames. The whole run is ONE lazy Spark DAG per returned frame; the
-reference's per-subject Python loop and temp-CSV handoffs become
-partition parallelism and (optional) parquet stage materialization.
+frames. The whole run is ONE lazy Spark DAG: building it starts no Spark
+job (CSV types and units come from a bounded head read), and the
+annotated and metric frames are persisted so every returned frame reads
+them instead of re-deriving them. The reference's per-subject Python
+loop and temp-CSV handoffs become partition parallelism and (optional)
+parquet stage materialization.
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from physioview_spark.config import PipelineConfig
@@ -36,10 +40,14 @@ def run_pipeline(
     ``samples`` accepts a pre-built canonical frame. ``stage_dir``
     materializes the annotated stage to parquet (the reference's
     temp-CSV checkpoints, and the guard against plan re-expansion in
-    long chains); without it ``cache_annotated`` memory-caches the
-    annotated frame so downstream metric operators (which reference it
-    several times) run the Arrow kernel pass ONCE, not once per
-    self-join — measured 2x end-to-end on a 1 h @ 1024 Hz recording.
+    long chains); without it ``cache_annotated`` persists the annotated
+    frame so downstream metric operators (which reference it several
+    times) run the Arrow kernel pass ONCE, not once per self-join —
+    measured 2x end-to-end on a 1 h @ 1024 Hz recording — and persists
+    the metric frame that ``summary`` aggregates, so collecting
+    ``metrics`` and then ``summary`` derives the metrics once. The
+    caller owns both persists: release them with
+    ``out["samples"].unpersist()`` and ``out["metrics"].unpersist()``.
     """
     if (path is None) == (samples is None):
         raise ValueError("exactly one of path/samples required")
@@ -114,6 +122,7 @@ def run_pipeline(
             fs = float(rates[0])
 
     out: dict[str, DataFrame] = {}
+    persist = stage_dir is None and cache_annotated
     if dtype in CARDIAC_DTYPES:
         from physioview_spark.functions.spark_kernels import annotate_cardiac
         from physioview_spark.operators.ibi import attach_ibis
@@ -133,18 +142,8 @@ def run_pipeline(
             filter_on=config.filter_on,
             initial_hr=config.initial_hr,
         )
-        annotated = _stage(spark, annotated, stage_dir, "annotated")
-        if stage_dir is None and cache_annotated:
-            # CALLER-facing cache: bare persist, NOT cache.pin — the
-            # pin registry holds operator-internal frames only, and a
-            # release_pinned()/pinned_frames() scope exit (e.g.
-            # tools/check_oracle.py between queries) must not silently
-            # evict a cache the caller asked for and still owns
-            # (ADVICE r17 item 3). The caller releases it with
-            # out["samples"].unpersist() when done.
-            from pyspark import StorageLevel
-
-            annotated = annotated.persist(StorageLevel.MEMORY_AND_DISK)
+        annotated = _keep(
+            _stage(spark, annotated, stage_dir, "annotated"), persist)
         out["samples"] = annotated
         out["ibi"] = attach_ibis(annotated, fs=fs)
         with_ts = "ts" in annotated.columns
@@ -156,9 +155,9 @@ def run_pipeline(
                 seg_size=config.seg_size, min_hr=config.min_hr,
                 with_ts=with_ts)
         else:
-            out["metrics"] = compute_metrics(
+            out["metrics"] = _keep(compute_metrics(
                 annotated, fs=fs, seg_size=config.seg_size,
-                min_hr=config.min_hr, with_ts=with_ts)
+                min_hr=config.min_hr, with_ts=with_ts), persist)
             out["summary"] = cardiac_summary(out["metrics"])
     elif dtype == "ACC":
         from physioview_spark.operators.acc import (
@@ -190,31 +189,32 @@ def run_pipeline(
                 out_col="temp")
         annotated = annotate_eda(
             samples, fs=fs, scr_amp_min=config.scr_amp_min)
-        annotated = _stage(spark, annotated, stage_dir, "annotated")
-        if stage_dir is None and cache_annotated:
-            # CALLER-facing cache: bare persist, NOT cache.pin — the
-            # pin registry holds operator-internal frames only, and a
-            # release_pinned()/pinned_frames() scope exit (e.g.
-            # tools/check_oracle.py between queries) must not silently
-            # evict a cache the caller asked for and still owns
-            # (ADVICE r17 item 3). The caller releases it with
-            # out["samples"].unpersist() when done.
-            from pyspark import StorageLevel
-
-            annotated = annotated.persist(StorageLevel.MEMORY_AND_DISK)
+        annotated = _keep(
+            _stage(spark, annotated, stage_dir, "annotated"), persist)
         out["samples"] = annotated
-        out["metrics"] = compute_eda_metrics(
+        out["metrics"] = _keep(compute_eda_metrics(
             annotated.withColumn("eda", F.col("filtered")),
             fs=fs, seg_size=config.eda_seg_size,
             rolling_window=config.rolling_window,
             rolling_step=config.rolling_step,
             eda_min=config.eda_min, eda_max=config.eda_max,
             eda_max_slope=config.eda_max_slope,
-            temp_min=config.temp_min, temp_max=config.temp_max)
+            temp_min=config.temp_min, temp_max=config.temp_max), persist)
         out["summary"] = eda_summary(out["metrics"], samples=annotated)
     else:
         raise ValueError(f"unsupported dtype: {config.dtype}")
     return out
+
+
+def _keep(df: DataFrame, persist: bool) -> DataFrame:
+    """Persist a CALLER-facing frame (MEMORY_AND_DISK) when ``persist``.
+
+    A bare persist, NOT ``cache.pin``: the pin registry holds
+    operator-internal frames only, and a ``release_pinned()`` /
+    ``pinned_frames()`` scope exit (e.g. tools/check_oracle.py between
+    queries) must not evict a cache the caller asked for and still owns
+    (ADVICE r17 item 3). The caller releases it with ``unpersist()``."""
+    return df.persist(StorageLevel.MEMORY_AND_DISK) if persist else df
 
 
 def _stage(spark, df, stage_dir, name):

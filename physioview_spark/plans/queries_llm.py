@@ -329,9 +329,17 @@ def doc_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q("doc_profile_drift", """
 WITH b AS (
+  -- a stddev within 1e-12 of the mean's magnitude is a constant
+  -- column: no scale (profile_diff's rule)
   SELECT count(*) AS n,
-         avg(doc_id) AS m_id, stddev_samp(doc_id) AS s_id,
-         avg(n_chars) AS m_nc, stddev_samp(n_chars) AS s_nc,
+         avg(doc_id) AS m_id,
+         CASE WHEN stddev_samp(doc_id)
+                   > greatest(abs(avg(doc_id)) * 1e-12, 1e-12)
+              THEN stddev_samp(doc_id) END AS s_id,
+         avg(n_chars) AS m_nc,
+         CASE WHEN stddev_samp(n_chars)
+                   > greatest(abs(avg(n_chars)) * 1e-12, 1e-12)
+              THEN stddev_samp(n_chars) END AS s_nc,
          count(*) FILTER (WHERE doc_id IS NULL) AS nn_id,
          count(*) FILTER (WHERE lang IS NULL) AS nn_lang,
          count(*) FILTER (WHERE n_chars IS NULL) AS nn_nc

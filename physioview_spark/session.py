@@ -41,17 +41,20 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when unset so tests
     and bench share one entry point; on a real cluster pass ``None`` with
-    ``spark.master`` preconfigured, or an explicit URL.
+    ``spark.master`` preconfigured, or an explicit URL. Without
+    ``SPARK_GRAFT_CPUS`` the local thread count and the default
+    ``shuffle_partitions`` are the CPUs this process may run on, so a
+    small machine is not oversubscribed.
     """
     builder = SparkSession.builder.appName(app_name)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     if master is None and not os.environ.get("SPARK_MASTER"):
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)
     conf = dict(_DEFAULTS)
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        shuffle_partitions = int(cpus)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)

@@ -8,45 +8,140 @@
   partition-parallel read replaces the reference's sequential per-file loop
   (reference: dashboard/callbacks.py:743-892), the single biggest
   scalability win over the original.
+- Construction starts no Spark job: column types and the timestamp unit
+  come from one bounded (<= 64 KiB) driver-side head read of the first
+  data file, not from ``inferSchema`` (a full parse of every file) or a
+  median probe job.
 - ``infer_unix_unit``: s/ms/µs inference from the median magnitude
   (reference: dashboard/utils.py:308-325).
 """
 
 from __future__ import annotations
 
+import csv
 import os
+import re
+import statistics
+import zlib
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+
+HEAD_BYTES = 65536
+
+# Unix-epoch magnitude bands; neighbours differ by >= 100x
+_UNIX_BANDS = (("s", 1e8, 2e9), ("ms", 1e11, 2e13), ("us", 1e14, 2e16))
+_UNIT_SCALE = {"s": 1.0, "ms": 1e3, "us": 1e6}
+_INT = re.compile(r"[+-]?\d+")
+_NUM = re.compile(r"[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?")
+
+
+def _unix_unit(median: float | None) -> str | None:
+    """The s/ms/us band holding a Unix-timestamp median, else None."""
+    if median is not None:
+        for unit, lo, hi in _UNIX_BANDS:
+            if lo < median < hi:
+                return unit
+    return None
 
 
 def infer_unix_unit(df: DataFrame, ts_col: str,
                     sample_rows: int = 10000) -> str | None:
     """Infer Unix timestamp unit (s/ms/us) from the median magnitude of
-    a BOUNDED sample. All three unit bands differ by >=100x, so any
-    sample answers as reliably as the full column; the previous
-    full-column median was an extra eager pass over every row of every
-    CSV at ingest (reference does the same on pandas, where the data is
-    already in memory — on a 100 TB scan it is not free)."""
+    a BOUNDED sample of an existing frame (one small job). All three
+    unit bands differ by >=100x, so any sample answers as reliably as
+    the full column. ``load_signal_csv`` applies the same bands to its
+    driver-side head sample instead and runs no job."""
     med = (df.select(F.col(ts_col).cast("double").alias("m"))
            .where(F.col("m").isNotNull())
            .limit(sample_rows)
            .agg(F.median("m").alias("m"))
            .first()["m"])
-    if med is None:
-        return None
-    if 1e8 < med < 2e9:
-        return "s"
-    if 1e11 < med < 2e13:
-        return "ms"
-    if 1e14 < med < 2e16:
-        return "us"
-    return None
+    return _unix_unit(med)
 
 
-def _to_timestamp(col, unit: str):
-    c = F.col(col).cast("double")
-    scale = {"s": 1.0, "ms": 1e3, "us": 1e6}[unit]
-    return F.timestamp_micros((c / scale * 1e6).cast("long"))
+def _data_files(spark: SparkSession, path: str | list[str]) -> list[str]:
+    """Files Spark's scan reads: ``_``/``.``-prefixed names are hidden
+    (``_SUCCESS``, ``.crc``), as in Spark's own listing."""
+    from physioview_spark.sources import fsio
+
+    files = [u for u in fsio.list_files(spark, path)
+             if not u.rsplit("/", 1)[-1].startswith(("_", "."))]
+    if not files:
+        raise ValueError(f"no CSV data files under {path!r}")
+    return files
+
+
+def _head_rows(spark: SparkSession, uri: str) -> list[list[str]]:
+    """Complete CSV records in the first ``HEAD_BYTES`` of a file, header
+    first. A gzip file is inflated through the same bounded read, with
+    the inflated output capped at ``HEAD_BYTES`` too."""
+    from physioview_spark.sources import fsio
+
+    raw = fsio.read_head(spark, uri, HEAD_BYTES)
+    whole = len(raw) < HEAD_BYTES
+    if raw[:2] == b"\x1f\x8b":
+        inflate = zlib.decompressobj(16 + zlib.MAX_WBITS)
+        raw = inflate.decompress(raw, HEAD_BYTES)
+        whole = inflate.eof
+    lines = raw.decode("utf-8-sig", "replace").split("\n")
+    if not whole:
+        lines = lines[:-1]  # the read may end inside the last record
+    return list(csv.reader(ln.rstrip("\r") for ln in lines if ln.strip()))
+
+
+def _spark_header(names: list[str]) -> list[str]:
+    """Column names as Spark derives them from a header row: ``_c<i>``
+    for an empty name, ``<name><i>`` for a case-insensitive duplicate."""
+    lower = [n.lower() for n in names]
+    return [f"_c{i}" if not n else f"{n}{i}" if lower.count(n.lower()) > 1
+            else n for i, n in enumerate(names)]
+
+
+def _ts_type(values: list[str]) -> T.DataType:
+    """bigint / double when every sampled value parses as one, else
+    string (ISO timestamps, or no data rows to judge by)."""
+    if values and all(_INT.fullmatch(v) for v in values):
+        return T.LongType()
+    if values and all(_NUM.fullmatch(v) for v in values):
+        return T.DoubleType()
+    return T.StringType()
+
+
+def _sniff_schema(
+    spark: SparkSession, files: list[str], header_map: dict[str, str],
+) -> tuple[T.StructType, float | None]:
+    """Explicit read schema from the header of the first file and the
+    data rows of the first file that has any: mapped value columns are
+    double (the canonical type of ``schemas.signal_schema``), the ``ts``
+    column is typed by ``_ts_type``, unmapped columns stay string.
+    Also returns the median of the sampled ``ts`` values when they are
+    numeric, else None."""
+    header = rows = None
+    for uri in files:
+        head = _head_rows(spark, uri)
+        if header is None:
+            header = _spark_header(head[0] if head else [])
+        if len(head) > 1:
+            rows = head[1:]
+            break
+    ts_median = None
+    fields = []
+    for i, name in enumerate(header):
+        canon = header_map.get(name)
+        if canon == "ts":
+            vals = [r[i].strip() for r in rows or () if len(r) > i
+                    and r[i].strip()]
+            dtype = _ts_type(vals)
+            if not isinstance(dtype, T.StringType):
+                ts_median = statistics.median(map(float, vals))
+        else:
+            dtype = T.StringType() if canon is None else T.DoubleType()
+        fields.append(T.StructField(name, dtype, True))
+    return T.StructType(fields), ts_median
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
 
 def load_signal_csv(
@@ -64,6 +159,15 @@ def load_signal_csv(
     column, 'x','y','z','temp'). ``sample_idx`` is assigned per subject in
     file order (row_number over a monotonic id — stable for text files).
 
+    Types and the timestamp unit come from a bounded head sample of the
+    first data file (``_sniff_schema``), so building the frame starts no
+    Spark job; all files of one call share the first file's header.
+    Mapped value columns are double. A numeric ``ts`` in a Unix band
+    becomes a timestamp in the band's unit, any other numeric ``ts``
+    counts seconds from 0 when ``fs`` is given, and a string ``ts`` goes
+    through ``to_timestamp``. Raises ``ValueError`` when ``path`` holds
+    no data file.
+
     ``assume_partitioned``: shuffle-free indexing for the file-per-subject
     layout — each scan partition holds whole subjects (true for CSVs
     below ``maxPartitionBytes``), so ``sample_idx`` is a per-partition
@@ -71,18 +175,17 @@ def load_signal_csv(
     ``row_number`` over a full-frame exchange. At cohort scale the dense
     frame then reaches the kernels without ever shuffling.
     """
-    raw = spark.read.csv(path, header=True, inferSchema=True)
-    subject = F.regexp_replace(
-        F.element_at(F.split(F.input_file_name(), "/"), -1), r"\.csv$", ""
-    )
-    df = raw.withColumn("subject_id", subject)
-    selected = [F.col("subject_id")]
-    if not assume_partitioned:
-        df = df.withColumn("__mono", F.monotonically_increasing_id())
-        selected.append(F.col("__mono"))
-    for user_col, canon in header_map.items():
-        selected.append(F.col(f"`{user_col}`").alias(canon))
-    df = df.select(*selected)
+    schema, ts_median = _sniff_schema(
+        spark, _data_files(spark, path), header_map)
+    raw = spark.read.csv(path, schema=schema, header=True)
+    subject = ("regexp_replace(element_at(split(input_file_name(), '/'), -1),"
+               " '[.]csv$', '')")
+    canon = list(header_map.values())
+    df = raw.selectExpr(
+        f"{subject} AS subject_id",
+        *([] if assume_partitioned
+          else ["monotonically_increasing_id() AS __mono"]),
+        *(f"{_quote(u)} AS {c}" for u, c in header_map.items()))
     if assume_partitioned:
         import numpy as np
 
@@ -105,29 +208,27 @@ def load_signal_csv(
 
         df = df.mapInPandas(assign, out_schema)
     else:
-        w = Window.partitionBy("subject_id").orderBy("__mono")
-        df = df.withColumn(
-            "sample_idx", F.row_number().over(w) - 1).drop("__mono")
+        df = df.selectExpr(
+            "subject_id", *canon,
+            "row_number() OVER (PARTITION BY subject_id ORDER BY __mono)"
+            " - 1 AS sample_idx")
 
-    if has_ts and "ts" in df.columns:
-        dt = dict(df.dtypes)["ts"]
-        if dt in ("bigint", "double", "int"):
-            unit = infer_unix_unit(df, "ts")
-            if unit is not None:
-                df = df.withColumn("ts", _to_timestamp("ts", unit))
-            elif fs:
-                # numeric but not unix: treat as seconds-elapsed at fs
-                df = df.withColumn(
-                    "ts",
-                    F.timestamp_micros(
-                        (F.col("ts").cast("double") * 1e6).cast("long")
-                    ),
-                )
-        elif dt == "string":
-            df = df.withColumn("ts", F.to_timestamp("ts"))
-    front = ["subject_id", "sample_idx"] + (["ts"] if "ts" in df.columns else [])
-    rest = [c for c in df.columns if c not in front]
-    return df.select(*front, *rest)
+    ts = "ts"
+    if has_ts and "ts" in canon:
+        unit = _unix_unit(ts_median)
+        if ts_median is None:
+            ts = "to_timestamp(ts)"
+        elif unit is not None:
+            ts = ("timestamp_micros(CAST(CAST(ts AS DOUBLE)"
+                  f" / {_UNIT_SCALE[unit]!r}D * 1000000.0D AS BIGINT))")
+        elif fs:
+            # numeric but not unix: treat as seconds-elapsed at fs
+            ts = ("timestamp_micros("
+                  "CAST(CAST(ts AS DOUBLE) * 1000000.0D AS BIGINT))")
+    front = ["subject_id", "sample_idx"] + (["ts"] if "ts" in canon else [])
+    rest = [c for c in canon if c not in front]
+    return df.selectExpr(*(f"{ts} AS ts" if c == "ts" else c for c in front),
+                         *rest)
 
 
 def write_stage(df: DataFrame, base_dir: str, stage: str,

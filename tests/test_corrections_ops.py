@@ -877,6 +877,27 @@ class TestProfileDiff:
         assert "mean_shift_unscaled" in d2.flags
 
 
+    def test_constant_column_at_four_partitions(self, spark):
+        """A constant column's stddev is exactly 0.0 from one partition
+        but can carry ULP scatter (3.16e-16 for 100 rows of 7.0 over 4
+        partitions) once partial aggregates merge. Either way it is a
+        constant column: no scaled shift, the unscaled flag on a move,
+        and no flag when it stays put."""
+        from physioview_spark.operators.validate import (
+            profile, profile_diff,
+        )
+
+        def const(v):
+            return spark.range(100).repartition(4).selectExpr(
+                f"cast({v!r} as double) as c")
+
+        before = profile(const(7.0))
+        d = profile_diff(before, profile(const(9.0))).collect()[0]
+        assert d.mean_shift_sds is None
+        assert d.flags == "mean_shift_unscaled"
+        same = profile_diff(before, profile(const(7.0))).collect()[0]
+        assert same.mean_shift_sds is None and same.flags == ""
+
 class TestSkewReport:
     def test_matches_duckdb_and_null_keys(self, spark):
         import duckdb

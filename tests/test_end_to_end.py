@@ -231,6 +231,39 @@ class TestConfigDrivenPipeline:
         s = frames["summary"].toPandas()
         assert len(s) == 2 and (s["n_segments"] == 3).all()
 
+    def test_csv_run_starts_no_job_and_computes_metrics_once(
+            self, spark, tmp_path, jobs_started):
+        """Building a CSV run starts no Spark job (types and units come
+        from a bounded head read), and ``summary`` reads the persisted
+        ``metrics`` instead of re-deriving the metric plan."""
+        from physioview_spark.config import PipelineConfig
+        from physioview_spark.operators import cardiac_summary
+        from physioview_spark.pipeline import run_pipeline
+
+        for s in range(2):
+            sig, _ = synth_ecg(seconds=60, seed=30 + s)
+            ts = 1700000000.0 + np.arange(len(sig)) / 250.0
+            pd.DataFrame({"t": ts, "v": sig}).to_csv(
+                tmp_path / f"c{s}.csv", index=False)
+        cfg = PipelineConfig(dtype="ECG", fs=250.0, seg_size=30,
+                             headers={"t": "ts", "v": "ecg"})
+        frames, n_jobs = jobs_started(
+            lambda: run_pipeline(spark, cfg, path=str(tmp_path)))
+        assert n_jobs == 0
+        try:
+            metrics = frames["metrics"].collect()
+            summary, n_jobs = jobs_started(frames["summary"].collect)
+            assert n_jobs <= 1
+            # the same rollup as a summary over the unpersisted frame
+            fresh = cardiac_summary(spark.createDataFrame(
+                metrics, frames["metrics"].schema)).collect()
+            key = lambda r: r.subject_id  # noqa: E731
+            assert sorted(summary, key=key) == sorted(fresh, key=key)
+            assert [r.n_segments for r in summary] == [2, 2]
+        finally:
+            frames["samples"].unpersist()
+            frames["metrics"].unpersist()
+
     def test_eda_from_config(self, spark):
         from physioview_spark.config import PipelineConfig
         from physioview_spark.pipeline import run_pipeline
@@ -488,3 +521,38 @@ class TestConfigDrivenPipeline:
         # |acc| ~ 9.8-10; per-second sums * 60s per segment
         auc_col = [c for c in m.columns if "auc" in c.lower()][0]
         assert (m[auc_col] > fs * 9.0 * 60).all()
+
+
+class TestMetricConstructionCost:
+    def test_compute_metrics_py4j_round_trips_bounded(self, spark,
+                                                      monkeypatch):
+        """compute_metrics builds its plan from SQL expression strings:
+        a Column-tree build of the same plan took ~2,600 py4j round trips
+        to the JVM, the string build ~450."""
+        from physioview_spark import cache
+        from physioview_spark.operators import compute_metrics
+
+        ann = spark.range(2 * 256 * 120).selectExpr(
+            "concat('s', CAST(id % 2 AS STRING)) AS subject_id",
+            "id div 2 AS sample_idx",
+            "timestamp_micros(1700000000000000 + (id div 2) * 3906) AS ts",
+            "CASE WHEN (id div 2) % 200 = 0 THEN 1.0 END AS beat",
+            "CASE WHEN (id div 2) % 5000 = 0 THEN 1.0 END AS artifact")
+        client = spark.sparkContext._gateway._gateway_client
+        calls = []
+        send = client.send_command
+
+        def counting(*a, **k):
+            calls.append(1)
+            return send(*a, **k)
+
+        with cache.pinned_frames():
+            compute_metrics(ann, fs=256.0)  # first-use JVM lookups
+            monkeypatch.setattr(client, "send_command", counting)
+            out = compute_metrics(ann, fs=256.0)
+            monkeypatch.undo()
+        assert len(calls) <= 800, len(calls)
+        assert out.columns == [
+            "subject_id", "segment", "ts", "n_detected", "n_expected",
+            "n_missing", "pct_missing", "n_artifact", "pct_artifact",
+            "invalid"]

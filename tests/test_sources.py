@@ -66,6 +66,99 @@ class TestCsvSource:
             spark.range(100).selectExpr("id as ts"), "ts") is None
 
 
+class TestCsvHeadSniff:
+    """load_signal_csv types its columns and picks the timestamp unit from
+    a bounded head read of the first data file: no Spark job, whatever
+    the layout."""
+
+    HM = {"t": "ts", "v": "ecg"}
+
+    def _load(self, spark, jobs_started, path, **kw):
+        from physioview_spark.sources import load_signal_csv
+
+        df, n_jobs = jobs_started(lambda: load_signal_csv(
+            spark, str(path), "ecg", header_map=kw.pop("hm", self.HM), **kw))
+        assert n_jobs == 0
+        return df, df.orderBy("subject_id", "sample_idx").collect()
+
+    def test_integer_values_come_out_double(self, spark, jobs_started,
+                                            tmp_path):
+        (tmp_path / "a.csv").write_text(
+            "t,v\n" + "".join(f"{1700000000 + j},{j}\n" for j in range(50)))
+        df, rows = self._load(spark, jobs_started, tmp_path)
+        assert dict(df.dtypes)["ecg"] == "double"
+        assert [r.ecg for r in rows[:3]] == [0.0, 1.0, 2.0]
+        assert rows[1].ts.timestamp() - rows[0].ts.timestamp() == 1.0
+
+    def test_header_only_file(self, spark, jobs_started, tmp_path):
+        (tmp_path / "a.csv").write_text("t,v\n")
+        df, rows = self._load(spark, jobs_started, tmp_path)
+        assert rows == []
+        assert dict(df.dtypes)["ecg"] == "double"
+        assert dict(df.dtypes)["ts"] == "timestamp"
+
+    def test_iso_string_timestamps(self, spark, jobs_started, tmp_path):
+        (tmp_path / "a.csv").write_text("t,v\n" + "".join(
+            f"2024-01-01 00:00:{j:02d}.25,{j * 0.5}\n" for j in range(20)))
+        df, rows = self._load(spark, jobs_started, tmp_path)
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        assert rows[3].ts.second == 3 and rows[3].ts.microsecond == 250000
+
+    @pytest.mark.parametrize("scale", [1e3, 1e6])
+    def test_ms_and_us_epochs(self, spark, jobs_started, tmp_path, scale):
+        (tmp_path / "a.csv").write_text("t,v\n" + "".join(
+            f"{int((1700000000 + j / 4) * scale)},0.5\n" for j in range(40)))
+        _, rows = self._load(spark, jobs_started, tmp_path)
+        assert rows[0].ts.timestamp() == 1700000000.0
+        assert rows[1].ts.timestamp() == 1700000000.25
+
+    def test_hidden_and_marker_files_are_skipped(self, spark, jobs_started,
+                                                 tmp_path):
+        # sorted first and unparseable as the data layout: a sniff that
+        # read them would type or name the columns wrongly
+        (tmp_path / "_SUCCESS").write_text("")
+        (tmp_path / ".a.csv.crc").write_text("crc,junk\nxx,yy\n")
+        (tmp_path / "s1.csv").write_text(
+            "t,v\n" + "".join(f"{1700000000 + j},{j}.5\n" for j in range(9)))
+        df, rows = self._load(spark, jobs_started, tmp_path)
+        assert {r.subject_id for r in rows} == {"s1"} and len(rows) == 9
+        assert dict(df.dtypes)["ts"] == "timestamp"
+
+    def test_gzip_input_sniffed_through_bounded_inflate(
+            self, spark, jobs_started, tmp_path, monkeypatch):
+        import gzip
+
+        from physioview_spark.sources import fsio
+
+        reads = []
+        real_head = fsio.read_head
+
+        def head(spark, uri, max_bytes=65536):
+            reads.append(max_bytes)
+            return real_head(spark, uri, max_bytes)
+
+        monkeypatch.setattr(fsio, "read_head", head)
+        rng = np.random.default_rng(0)
+        # ~1 MB of text: larger than the head read both packed and inflated
+        body = "".join(f"{1700000000000 + 4 * j},{rng.normal():.9f}\n"
+                       for j in range(40000))
+        with gzip.open(tmp_path / "g.csv.gz", "wt") as f:
+            f.write("t,v\n" + body)
+        assert (tmp_path / "g.csv.gz").stat().st_size > 65536
+        df, rows = self._load(spark, jobs_started, tmp_path)
+        assert reads and max(reads) <= 65536
+        assert len(rows) == 40000 and dict(df.dtypes)["ecg"] == "double"
+        assert (rows[1].ts - rows[0].ts).microseconds == 4000
+        assert rows[0].ts.timestamp() == 1700000000.0  # ms epoch
+
+    def test_empty_dir_raises_value_error(self, spark, tmp_path):
+        from physioview_spark.sources import load_signal_csv
+
+        (tmp_path / "_SUCCESS").write_text("")
+        with pytest.raises(ValueError, match="no CSV data files"):
+            load_signal_csv(spark, str(tmp_path), "ecg", header_map=self.HM)
+
+
 # ---------------------------------------------------------------- EDF S1/S2
 
 class TestEdfSource:
