@@ -1,9 +1,11 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship query; ``queries()`` exposes one entry
-per implemented operator from SURVEY.md §2; ``oracle_sql()`` gives the
-DuckDB-equivalent SQL for every SQL-expressible query (non-relational
-kernels are declared without an oracle → rows-only check).
+per implemented operator from SURVEY.md §2, in declaration order;
+``oracle_sql()`` gives the DuckDB oracle of every declared query: SQL
+that recomputes the result, or a pinned parquet fixture for the
+kernels whose math is not SQL-expressible. Tier-1 compares every
+query with its oracle (tests/test_registry_smoke.py).
 """
 
 from __future__ import annotations
@@ -15,315 +17,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-
-# The driver verifies the FIRST 50 registry entries per round. Serve the
-# least-recently-verified queries first so every declared operator keeps a
-# fresh driver-green row; long-green queries rotate behind the window (they
-# stay covered by pytest and by earlier rounds' CORRECTNESS records).
-#
-# The rotation is DERIVED from the CORRECTNESS_r*.json files committed in
-# the tree (last round each query passed its driver check), so it cannot
-# go stale when a round forgets to re-edit a hand-written list. The only
-# hand-maintained part is _CHANGED_IN_ROUND: query -> round whose session
-# touched its code — a prior green no longer attests the current bytes,
-# so the query jumps the queue until the driver records a pass at or
-# after that round (then the entry is inert; pruning it is optional).
-# Add `name: round` as you edit green queries — and if the CURRENT
-# round's CORRECTNESS file already exists when you edit (the gate ran
-# before your change), record round+1 so the pre-edit green cannot
-# satisfy the entry.
-_CHANGED_IN_ROUND = {
-    # (r06-r16 entries all attested green at their rounds — pruned per
-    # VERDICT r14/r15/r16 item 6 as their pinned SURVEY blocks demoted
-    # to history; tools/rotation_report.py 16 classified all 13 prior
-    # entries inert before this prune. Inert entries are bookkeeping
-    # only — pruning them never changes the serve order.)
-    #
-    # r17 (VERDICT r16 item 5): operator-internal persists now route
-    # through the package-level physioview_spark.cache registry
-    # (llm/_cache.py promoted; metrics' _seg_samples / rolling extents /
-    # per-second aggregates switched from bare persist() to cache.pin —
-    # same MEMORY_AND_DISK level, same plan shape: plan census 0
-    # drifted). Output-identical by construction, but the reached bytes
-    # changed (import-line + persist-call edits), so every query
-    # transiting llm/dedup.py module-level, llm.text.tfidf_topk /
-    # trigram_typicality, llm.similarity.semantic_dedup_delta, or the
-    # metrics pin sites re-attests (tools/changed_queries.py list).
-    # CORRECTNESS_r17 does not exist yet, so the edit round is 17.
-    "doc_jaccard_pairs": 17,
-    "doc_passage_dedup": 17,
-    "doc_simhash_near_dups": 17,
-    "kernel_cardiac_rolling_ppg": 17,
-    "multimodal_audio_near_dups": 17,
-    "multimodal_blocks_near_dups": 17,
-    "multimodal_image_dedup_decisions": 17,
-    "multimodal_image_near_dups": 17,
-    "seconds_hr_context": 17,
-    "streaming_near_dup_pairs": 17,
-    # r17 (ADVICE r16 item 2): top_revenue_nations' body extracted to a
-    # shared top_revenue_nations_body so tools/bench_bucketing.py
-    # imports it instead of mirroring it — plan-identical up to
-    # expression IDs (pinned by test_bucketing_tool_body_in_sync), but
-    # the reached bytes changed. Same extraction for
-    # order_priority_counts (VERDICT r16 item 4).
-    "top_revenue_nations": 17,
-    "order_priority_counts": 17,
-    # r17 empty-input hardening (new hostile axis, 101/101 after): the
-    # vector-family queries derive their seed codebook via a shared
-    # _seed_codebook helper that substitutes a dummy centroid on an
-    # empty corpus (was IndexError at plan time); profile_diff's null
-    # rate is nulls/nullif(n,0) — NULL, not 0.0, over zero rows (its
-    # oracle's literal 0.0 recomputed with the same semantics; sf0.01
-    # output unchanged). The delta/streaming family was covered by the
-    # entries above; these five complete the reachers.
-    # r17 skew-axis finding: a single-embedding-row window's Gram
-    # matrix is exactly rank-1 and its svd_entropy exactly 0 — the
-    # closed form emitted cross-engine acos noise instead; engine and
-    # oracle now pin the gn == 1 case to 0.0 (NumPy-SVD-exact). The
-    # two compute_eda_features reachers re-attest.
-    "eda_extended_features": 17,
-    "eda_rolling_features": 17,
-    # r17 null-axis hardening wave 2: the search family excludes NULL
-    # vectors on BOTH sides (engine filters in ivf_topk/encode_pq/
-    # pq_topk; oracles filter the embeddings refs), the dedup family
-    # KEEPS them as trivially-unique (engine already did — oracles
-    # gain the null keep rows), and dsp.moving_average is NaN-aware
-    # with SQL AVG semantics (bit-identical on NaN-free input;
-    # kernel_hrv_features reaches the kernel). Real-SF oracles all
-    # re-green before commit.
-    "embedding_label_centroids": 17,
-    "embedding_quantize_int8": 17,
-    "kernel_hrv_features": 17,
-    # r18 optimization: moving_average_events rewritten from
-    # apply_kernel (row_number + FlatMapGroupsInPandas cumsum) to the
-    # pure JVM window AVG its oracle already runs — value-identical on
-    # all SFs + 6 axes, execute 2.6 -> 0.8 s, no Python in the plan.
-    "moving_average_events": 18,
-    # r18 token contract (VERDICT r17 item 1 / the 12 null-axis
-    # divergences): tokens()' semantics defined once in llm/text.py
-    # (NULL text -> NULL array / no rows in token-derived frames;
-    # empty/whitespace-only -> 0 tokens; counts clamp NULL to 0;
-    # quality metrics NULL on NULL/empty text) — quality_score gates
-    # its metric columns, token_budget_sample gains the pack_sequences
-    # clamp, and ~13 oracles adopt the canonical
-    # CASE-trim-empty/string_split_regex fragment. Plus the STRATUM
-    # CONTRACT (llm/sampling.py): NULL strata are excluded from every
-    # stratum-keyed sampler (was: window-samplers kept the NULL
-    # partition, join-samplers dropped it — the 36-row
-    # token_budget_sample gap on the null axis). sf0.01 + all three
-    # hostile axes re-green on the full touched set before commit;
-    # null axis now 100 ok + 1 knife-edge stale / 0 FAIL.
-    # (doc_curation_pipeline_v3 / doc_minhash_signatures also took this
-    # r18 wave; their entries moved to the r19 block below — later edit
-    # supersedes.)
-    "doc_materialize_packed": 18,
-    "doc_mixture_sample": 18,
-    "doc_model_quality": 18,
-    "doc_pack_sequences": 18,
-    "doc_quality_scores": 18,
-    "doc_repetition_stats": 18,
-    "doc_stratified_sample": 18,
-    "doc_token_budget_rate": 18,
-    "doc_token_budget_sample": 18,
-    "doc_token_chunks": 18,
-    "doc_weighted_sample": 18,
-    # r18 (VERDICT r17 item 4): doc_profile_drift's oracle computes
-    # the lang null-rate from the corpus (doc_id%10 nulling ON TOP of
-    # base-corpus NULLs) instead of the synthetic never-null formula;
-    # doc_id/n_chars null-rates likewise computed, flag order matches
-    # profile_diff's array order.
-    "doc_profile_drift": 18,
-    # r18 (ADVICE r17 items 1+4): _seed_codebook filters NULL
-    # embeddings before collecting seeds (matching the oracles'
-    # null-filtered cents CTEs — a NULL at an even vec_id < 16 raised
-    # TypeError at plan time or shifted centroid numbering), returns
-    # the zero dummy only when the corpus has NO non-null embedding at
-    # all (sized to the real 64-dim), and raises on the
-    # rows-but-no-seed-ids slice instead of silently scoring
-    # everything 0.0 against an empty-cents oracle.
-    "embedding_ann_ivf": 18,
-    "embedding_ann_ivfpq": 18,
-    "embedding_ann_pq": 18,
-    "embedding_semantic_dedup": 18,
-    "embedding_semantic_dedup_delta": 18,
-    "streaming_semantic_dedup": 18,
-    # r18 token-contract tier 0 (the Unicode/whitespace axis): TOKEN
-    # WHITESPACE is the explicit ASCII class [ \t\n\x0B\f\r] — Java's
-    # \s includes \x0B, RE2's does not, so the \s shorthand itself was
-    # a cross-engine divergence on any document containing a vertical
-    # tab. tokens() now splits raw text on the explicit class and
-    # drops phantom '' entries (trim() is SPACE-only on both engines,
-    # so tab/newline padding produced phantom tokens pre-r18);
-    # word_shingles/simhash/BPE inherit; ~30 oracle fragments adopt
-    # list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'),
-    # x -> x <> ''); quality's degenerate gate is now n_tokens = 0
-    # (whitespace-only text has no prose quality either). Provably
-    # output-identical on all existing corpora (zero docs with tabs/
-    # \x0B/padding — checked); divergence visible only on the new
-    # unicode axis. These ten complete the reachers (the rest of the
-    # token family is already r18 above).
-    # r18 extremes axis (vector finiteness): the excluded-vector
-    # contract (similarity.vector_is_finite) extends the r17 NULL
-    # exclusion to vectors with NaN/Inf components — search/quantize
-    # filter both sides, dedup keeps them as NULL-bucket trivially-
-    # unique rows, quantize's tinyint cast became try_cast (ANSI +
-    # InferFiltersFromGenerate + codegen CSE evaluated the cloned cast
-    # before the short-circuiting finiteness conjunct — a real crash),
-    # and the delta oracle gained the keep branch for excluded
-    # new-batch vectors the null axis' moduli could never reach. The
-    # rest of the vector family is already r18 above; this completes
-    # the reachers.
-    "embedding_cosine_topk": 18,
-    "doc_bpe_encode": 18,
-    "doc_bpe_token_stats": 18,
-    "doc_char_entropy": 18,
-    "doc_language_id": 18,
-    "doc_pii_scrub": 18,
-    "doc_script_profile": 18,
-    "doc_strip_boilerplate": 18,
-    "doc_temperature_mixture": 18,
-    "doc_vocabulary_topk": 18,
-    "doc_winnow_fingerprints": 18,
-    # r18 optimization: the three [current, unbounded following] window
-    # frames (metrics.get_missing backfill, asof_join forward pass,
-    # interp_join forward carry) rewritten as running frames over the
-    # reversed sort order — Spark's UnboundedFollowingWindowFunctionFrame
-    # re-scans the tail per row (O(n^2) per group; a measured 28.9 s
-    # single-task straggler on sqa_missing_segments at sf0.1), the
-    # reversed last(ignorenulls) frame is incremental O(n). Value-
-    # identical (ties resolved by the same keys, directions all
-    # flipped); sf0.01 oracle re-green on the full reacher set.
-    "asof_latest_order": 18,
-    "asof_tolerance_match": 18,
-    "beat_edits_applied": 18,
-    "e4_ingest_aligned": 18,
-    "order_value_interp": 18,
-    # (similarity norm-hoist reachers, see r18 optimization note below)
-    "embedding_ann_lsh": 18,
-    "embedding_knn_graph": 18,
-    "embedding_near_dup_pairs": 18,
-    "sqa_missing_segments": 18,
-    "cardiac_summary_rollup": 18,
-    "sqa_rolling_metrics": 18,
-    "kernel_cardiac_sqa_ecg": 18,
-    # r18 optimization: _fan_out_groups — explicit REPARTITION_BY_NUM
-    # before the compute-heavy grouped pandas kernels (apply_kernel,
-    # annotate_cardiac, annotate_eda); AQE's byte-based coalescing was
-    # packing byte-tiny compute-huge groups into one task (kernel_eda_scr
-    # execute 5.9 -> 3.3 s). Per-group math untouched; fixture oracles
-    # unchanged.
-    "kernel_eda_scr": 18,
-    # r18 optimization: plans/common.read() gained the conditional
-    # scan fan-out parameter (single-file single-row-group inputs
-    # hash-repartition by the table key when scan splits < cores; a
-    # no-op at production layouts and for every call that does not
-    # pass fan_out). 18 LLM queries opt in after a per-query on/off
-    # A/B (OPTIMIZATION_r18.md item 8); queries that reach read()
-    # WITHOUT fan_out keep bit-identical plans and results (the new
-    # parameter defaults to None and adds no plan node), so they are
-    # deliberately NOT re-listed here — both full-registry oracle
-    # sweeps of the A/B session (fan-out on, and after the reverts)
-    # ran 101 ok / 0 FAIL on current bytes.
-    #
-    # r18 backfill (VERDICT r18 item 2): these three took the r18 scan
-    # fan-out opt-in (behavioral plan change) but kept their inert r17
-    # entries and were NOT in the r18 driver sample — the r18 bytes are
-    # locally oracle-green (two full 101-ok sweeps) but never
-    # driver-attested. Entry = 18 (the round that edited them) so they
-    # jump the r19 queue.
-    "doc_decontaminate": 18,
-    "doc_tfidf_topk": 18,
-    "doc_trigram_typicality": 18,
-    # r19: the one-pass LSH rewrite (llm/dedup.py _seed_minhash_cols /
-    # minhash_signatures / _lsh_bands — swept into the r18 snapshot
-    # commit 04ce421 without receipts, VERDICT r18 item 1) is now
-    # receipted: interleaved A/B vs the legacy explode+collect_list
-    # gear (OPTIMIZATION_r19.md), before/after plans in plans/r19/,
-    # plan census regenerated (obj_agg 18->0 / 4->0 — the collect_list
-    # ObjectHashAggregates became projections), and the temp
-    # PHYSIOVIEW_LSH_ONEPASS gate DELETED (plans proven identical
-    # modulo expression IDs post-delete). Every reacher of the
-    # rewritten defs re-attests on the final bytes; CORRECTNESS_r18
-    # exists, so the edit round is 19.
-    "doc_curation_pipeline_v3": 19,
-    "doc_dedup_delta": 19,
-    "doc_dup_clusters": 19,
-    "doc_hash_split": 19,
-    "doc_minhash_lsh_candidates": 19,
-    "doc_minhash_signatures": 19,
-    "streaming_near_dup_pairs": 19,
-}
-
-
-def _last_verified(upto: int | None = None) -> dict[str, int]:
-    """Last round each query passed its driver check, parsed from the
-    CORRECTNESS_r*.json files next to this file. A full check passes when
-    rows+schema+hash all match; an oracle-less query passes its weaker
-    rows-only check when the driver recorded a row count without error.
-    ``upto`` restricts to rounds <= upto (tools/rotation_report.py uses
-    it to keep a committed ledger block reproducible after later rounds'
-    files land)."""
-    import glob
-    import json
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    seen: dict[str, int] = {}
-    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        if upto is not None and rnd > upto:
-            continue
-        try:
-            with open(path) as f:
-                records = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, rec in records.items():
-            if not isinstance(rec, dict):
-                continue
-            full = (rec.get("rows_match") and rec.get("schema_match")
-                    and rec.get("hash_match"))
-            rows_only = (rec.get("err") == "no_oracle"
-                         and rec.get("spark_rows") is not None)
-            if full or rows_only:
-                seen[name] = max(seen.get(name, 0), rnd)
-    return seen
-
-
-def _serve_order(names: list[str], upto: int | None = None) -> list[str]:
-    """Changed-since-green queries first, then never-verified, then by
-    ascending last-verified round; name-sorted within a tier so the
-    order is deterministic across sessions.
-
-    The changed map self-cleans: an entry jumps the queue only while
-    its last green row predates the round that edited it
-    (``_CHANGED_IN_ROUND``); once the driver records a pass AT or
-    AFTER the edit round, the post-change bytes are attested and the
-    query rejoins the normal least-recently-verified rotation. Stale
-    entries therefore never pin the window across rounds.
-
-    ``upto`` caps the CORRECTNESS horizon like ``_last_verified``'s —
-    tools/rotation_report.py threads it through so a committed SURVEY
-    ledger block stays reproducible after later rounds' files land
-    (VERDICT r12 item 1: the histogram half of a report honored the
-    horizon while this serve-order half silently ignored it). The
-    horizon also excludes _CHANGED_IN_ROUND entries from the future of
-    the window being predicted (edit round > upto + 1): a block pinned
-    at "data through rH -> rH+1 window" must not shift when a LATER
-    session records new edits. Corollary: never prune an entry while a
-    pinned SURVEY block's horizon can still see it — inert entries are
-    harmless and keep historical blocks byte-stable."""
-    last = _last_verified(upto=upto)
-    changed = [n for n, edited in _CHANGED_IN_ROUND.items()
-               if n in names and last.get(n, 0) < edited
-               and (upto is None or edited <= upto + 1)]
-    rest = sorted((n for n in names if n not in changed),
-                  key=lambda n: (last.get(n, 0), n))
-    return changed + rest
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -385,7 +78,7 @@ def _registry():
     for m in modules:
         qs.update(m.QUERIES)
         oracles.update(m.ORACLE)
-    qs = {n: _with_shipped(qs[n]) for n in _serve_order(list(qs))}
+    qs = {n: _with_shipped(fn) for n, fn in qs.items()}
     return qs, oracles
 
 

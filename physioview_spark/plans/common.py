@@ -20,7 +20,8 @@ FIXTURE_DIR = os.path.join(
 
 def fixture_oracle(name: str) -> str | None:
     """DuckDB SQL reading the pinned fixture for ``name``, or None when no
-    fixture has been generated (the query then stays rows-only)."""
+    fixture has been generated (the query then has no oracle, which
+    tests/test_registry_smoke.py rejects)."""
     d = os.path.join(FIXTURE_DIR, name)
     if not os.path.isdir(d):
         return None
@@ -102,20 +103,17 @@ def read_fanned(spark: SparkSession, sf_dir: str, name: str,
     not round-robin), and SCALE-ADAPTIVE: at production layouts the
     file count alone exceeds the core count, the condition is false,
     and the plan is byte-identical to the plain read — no shuffle is
-    added where the scan is already parallel. A separate def (not a
-    ``read`` parameter) so the ~80 call sites that never fan out keep
-    a byte-identical code path through ``read`` itself.
+    added where the scan is already parallel.
     """
     df = read(spark, sf_dir, name)
-    if os.environ.get("PHYSIOVIEW_SCAN_FANOUT", "1") != "0":
-        cores = spark.sparkContext.defaultParallelism
-        try:
-            max_pb = int(spark.conf.get(
-                "spark.sql.files.maxPartitionBytes", "134217728"))
-        except ValueError:
-            max_pb = 134217728  # human-readable conf value ("128m")
-        if _scan_splits_estimate(f"{sf_dir}/{name}.parquet", max_pb) < cores:
-            df = df.repartition(cores, F.col(fan_out))
+    cores = spark.sparkContext.defaultParallelism
+    try:
+        max_pb = int(spark.conf.get(
+            "spark.sql.files.maxPartitionBytes", "134217728"))
+    except ValueError:
+        max_pb = 134217728  # human-readable conf value ("128m")
+    if _scan_splits_estimate(f"{sf_dir}/{name}.parquet", max_pb) < cores:
+        df = df.repartition(cores, F.col(fan_out))
     return df
 
 

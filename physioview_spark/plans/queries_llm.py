@@ -3,8 +3,9 @@
 Covers: text analysis (tokens, quality, language ID, fingerprint), dedup
 (exact, Jaccard, MinHash signatures + LSH candidates, SimHash), similarity
 search (brute-force cosine top-k, LSH-bucketed ANN), multimodal binary
-plumbing. SQL-expressible ops carry exact oracles; LSH/SimHash/multimodal
-are rows-only with golden tests in tests/test_llm.py.
+plumbing. SQL-expressible ops carry exact oracles; the fake multimodal
+codecs are gated by pinned parquet fixtures (``fixture_oracle``), with
+golden tests in tests/test_llm.py.
 """
 
 from __future__ import annotations
@@ -12,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from physioview_spark.llm import dedup, sampling, similarity, text
-from physioview_spark.plans.common import fixture_oracle, read
+from physioview_spark.plans.common import fixture_oracle, read, read_fanned
 
 QUERIES: dict = {}
 ORACLE: dict[str, str] = {}
@@ -37,19 +38,6 @@ def q(name: str, oracle: str | None = None):
 # which exercises the same token_count path plus the BPE encoder;
 # evicted to keep the declared window budget serving the new r09
 # gates. VERDICT r08 item 2.)
-
-
-
-def _read_fanned(spark: SparkSession, sf_dir: str, name: str,
-                 key: str) -> DataFrame:
-    """Call-site shim for :func:`physioview_spark.plans.common.
-    read_fanned` (the r18 conditional scan fan-out) with a function-
-    local import, so opting a query in or out never edits this
-    module's import statements — the rotation gate
-    (tools/changed_queries.py) treats module-level edits as tainting
-    every def in the file, which would force no-op re-attestations."""
-    from physioview_spark.plans.common import read_fanned
-    return read_fanned(spark, sf_dir, name, key)
 
 
 @q("doc_weighted_sample", """
@@ -123,7 +111,7 @@ SELECT doc_id, n_chars_calc, n_tokens,
 FROM t
 """)
 def doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _read_fanned(spark, sf_dir, "documents", "doc_id")
+    docs = read_fanned(spark, sf_dir, "documents", "doc_id")
     return text.quality_score(docs).select(
         "doc_id", "n_chars_calc", "n_tokens", "mean_word_len", "punct_ratio",
         "digit_ratio", "stopword_ratio", "quality_score",
@@ -172,7 +160,7 @@ FROM seeded GROUP BY doc_id, seed
 def doc_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures (8 permutations via seeded md5 string-min) —
     engine-portable by construction."""
-    docs = _read_fanned(spark, sf_dir, "documents", "doc_id")
+    docs = read_fanned(spark, sf_dir, "documents", "doc_id")
     return dedup.minhash_signatures(docs, k=3, num_hashes=8)
 
 
@@ -516,7 +504,7 @@ def doc_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash LSH candidate pairs (banded signatures; sub-quadratic scale
     path). Band hash = md5 of the sorted in-band minhashes — exact SQL
     twin; also verified against exact Jaccard in tests."""
-    docs = _read_fanned(spark, sf_dir, "documents", "doc_id")
+    docs = read_fanned(spark, sf_dir, "documents", "doc_id")
     return dedup.minhash_lsh_candidates(docs, k=3, num_hashes=8, band_size=2)
 
 
@@ -657,7 +645,7 @@ def doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups collapse to one keeper even when A~B~C but A!~C. Oracle
     recomputes the components with a recursive CTE over the same LSH
     pair CTEs."""
-    docs = _read_fanned(spark, sf_dir, "documents", "doc_id")
+    docs = read_fanned(spark, sf_dir, "documents", "doc_id")
     return dedup.dup_clusters(docs, k=3, num_hashes=8, band_size=2)
 
 
@@ -787,7 +775,7 @@ def doc_trigram_typicality(spark: SparkSession, sf_dir: str) -> DataFrame:
     therefore <= 4097 rows and broadcast — no corpus-sized shuffle on
     the Zipfian trigram key; the per-doc join input is pre-aggregated
     to (doc, trigram) multiplicities, sub-linear in text length."""
-    docs = _read_fanned(spark, sf_dir, "documents", "doc_id")
+    docs = read_fanned(spark, sf_dir, "documents", "doc_id")
     return text.trigram_typicality(docs, top_k=4096)
 
 
@@ -891,7 +879,7 @@ def doc_model_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     features (token stats + char entropy) through a fixed logistic
     model, keep = prob >= 0.5. Zero shuffles beyond the entropy
     aggregate; the scoring projection fuses into codegen."""
-    docs = _read_fanned(spark, sf_dir, "documents", "doc_id")
+    docs = read_fanned(spark, sf_dir, "documents", "doc_id")
     feats = text.quality_score(docs).select(
         "doc_id", "n_tokens", "mean_word_len", "punct_ratio",
         "digit_ratio", "stopword_ratio")
@@ -1184,7 +1172,7 @@ def doc_dedup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash-LSH band join with exact-Jaccard verification on the
     candidates only — no corpus self-join. decision/match_id/jaccard
     per new doc."""
-    docs = _read_fanned(spark, sf_dir, "documents", "doc_id")
+    docs = read_fanned(spark, sf_dir, "documents", "doc_id")
     new = docs.where(F.col("doc_id") % 5 == 0)
     corpus = docs.where(F.col("doc_id") % 5 != 0)
     return dedup.dedup_delta(new, corpus, threshold=0.5)
@@ -1343,7 +1331,7 @@ def doc_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition quality signals: most-frequent-2-gram
     fraction and duplicate-3-gram fraction per document. Linear explode +
     partial-aggregable groupBys, no self-join."""
-    docs = _read_fanned(spark, sf_dir, "documents", "doc_id")
+    docs = read_fanned(spark, sf_dir, "documents", "doc_id")
     return text.repetition_stats(docs)
 
 
@@ -1399,7 +1387,7 @@ def doc_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage codegen, no Python in the path. (The synthetic corpus is
     PII-free, so counts are zero here; tests/test_llm.py exercises real
     matches.)"""
-    docs = _read_fanned(spark, sf_dir, "documents", "doc_id")
+    docs = read_fanned(spark, sf_dir, "documents", "doc_id")
     return text.pii_scrub(docs).select(
         "doc_id", "n_emails", "n_phones", "n_ips",
         F.md5("text_scrubbed").alias("scrub_hash"),
@@ -1433,7 +1421,7 @@ def doc_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-gram shingles with any 'benchmark' doc (deterministic eval slice:
     doc_id % 25 == 0). Bench shingles broadcast; the corpus side streams
     through the hash join with no corpus-wide shuffle."""
-    docs = _read_fanned(spark, sf_dir, "documents", "doc_id")
+    docs = read_fanned(spark, sf_dir, "documents", "doc_id")
     bench = docs.where(F.col("doc_id") % 25 == 0)
     train = docs.where(F.col("doc_id") % 25 != 0)
     return dedup.decontaminate(train, bench, k=3, min_hits=3)
@@ -1542,7 +1530,7 @@ def embedding_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_ids) so the oracle can rebuild the identical index in SQL; the
     k-means-trained codebook path (train_ivf_centroids, pyspark.ml) runs
     the same ivf_topk mechanics and holds its recall bound in pytest."""
-    emb = _read_fanned(spark, sf_dir, "embeddings", "vec_id")
+    emb = read_fanned(spark, sf_dir, "embeddings", "vec_id")
     cents = _seed_codebook(emb)
     return similarity.ivf_topk(
         emb.where(F.col("vec_id") < 10), emb, cents, k=5, n_probe=3
@@ -1593,7 +1581,7 @@ def embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     score cosine pairs only within buckets, drop vectors with a
     lower-id near-duplicate (keep-first). The oracle rebuilds the
     quantizer, the within-bucket pair set, and the anti-join in SQL."""
-    emb = _read_fanned(spark, sf_dir, "embeddings", "vec_id")
+    emb = read_fanned(spark, sf_dir, "embeddings", "vec_id")
     cents = _seed_codebook(emb)
     return similarity.semantic_dedup(emb, cents, threshold=0.95)
 
@@ -1656,7 +1644,7 @@ def embedding_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds its recall bound in pytest (tests/test_llm.py)."""
     from physioview_spark.llm import pq
 
-    emb = _read_fanned(spark, sf_dir, "embeddings", "vec_id")
+    emb = read_fanned(spark, sf_dir, "embeddings", "vec_id")
     seeds = _seed_codebook(emb)
     d = len(seeds[0]) // 8
     codebooks = [[s[j * d:(j + 1) * d] for s in seeds] for j in range(8)]
@@ -1742,7 +1730,7 @@ def embedding_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall bound in pytest."""
     from physioview_spark.llm import pq
 
-    emb = _read_fanned(spark, sf_dir, "embeddings", "vec_id")
+    emb = read_fanned(spark, sf_dir, "embeddings", "vec_id")
     seeds = _seed_codebook(emb)
     d = len(seeds[0]) // 8
     codebooks = [[s[j * d:(j + 1) * d] for s in seeds] for j in range(8)]
@@ -1840,7 +1828,7 @@ def embedding_semantic_dedup_delta(
     only touched buckets (measured flat against a 10x corpus,
     PLANS.md). Nullable match columns are coalesced to -1 so the
     declared output stays scalar-only and null-free."""
-    emb = _read_fanned(spark, sf_dir, "embeddings", "vec_id")
+    emb = read_fanned(spark, sf_dir, "embeddings", "vec_id")
     cents = _seed_codebook(emb)
     out = similarity.semantic_dedup_delta(
         emb.where(F.col("vec_id") % 8 == 0),
@@ -2438,7 +2426,7 @@ SELECT doc_id, fp FROM short
 def doc_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling-hash winnowing fingerprints (MOSS scheme): k=8 char grams,
     window=4 minima, distinct per doc — the shared-substring detector."""
-    docs = _read_fanned(spark, sf_dir, "documents", "doc_id").where(F.col("doc_id") < 40)
+    docs = read_fanned(spark, sf_dir, "documents", "doc_id").where(F.col("doc_id") < 40)
     return text.winnow_fingerprints(docs, k=8, window=4)
 
 
@@ -2651,7 +2639,7 @@ def doc_curation_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # those out (r18, guide §2.5 input skew); the window/aggregate
     # stages (exact keeper, quality, passages) keep the plain read so
     # they don't pay an extra exchange before their own shuffles.
-    docs_sh = _read_fanned(spark, sf_dir, "documents", "doc_id")
+    docs_sh = read_fanned(spark, sf_dir, "documents", "doc_id")
     exact_keeper = F.min("doc_id").over(Window.partitionBy(F.md5("text")))
     base = docs.select("doc_id", "lang", exact_keeper.alias("__exk"))
     clusters = dedup.dup_clusters(docs_sh).select("doc_id", "cluster_id")
@@ -2804,7 +2792,7 @@ def doc_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection — stable across partitionings and corpus growth, unlike
     randomSplit — and the hash band arithmetic is the exact ANSI twin
     proven in tests/test_llm.py::TestHashSplit."""
-    docs = _read_fanned(spark, sf_dir, "documents", "doc_id")
+    docs = read_fanned(spark, sf_dir, "documents", "doc_id")
     clusters = dedup.dup_clusters(docs).select("doc_id", "cluster_id")
     split = sampling.leakage_safe_split(
         docs, {"train": 0.5, "val": 0.25, "test": 0.25},
@@ -2860,7 +2848,7 @@ def doc_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     table bounded to a 64-word exact head + mean-tail residual — at
     this vocabulary cap the residual path (the 100 TB skew guard) is
     exercised, not just the exact branch."""
-    docs = _read_fanned(spark, sf_dir, "documents", "doc_id")
+    docs = read_fanned(spark, sf_dir, "documents", "doc_id")
     return text.tfidf_topk(docs, k=3, top_vocab=64)
 
 

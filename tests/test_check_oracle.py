@@ -95,18 +95,33 @@ class TestCompareValues:
             _rows([0.232644, 2.5]), ["id", "x"])
         assert status == "fail"
 
-    def test_computed_oracles_share_tolerance_channel(self):
+    def test_computed_oracles_share_tolerance_channel(self, sf_dir):
         """VERDICT r17 item 3: the stale (knife-edge) classification
         must apply to COMPUTED oracles too, not only pinned fixtures —
         a 1-ulp flip at the 6-decimal rounding boundary
         (eda_extended_features perm_entropy on the null axis) is
-        numeric drift, not a wrong answer. Pin: main() no longer gates
-        the stale branch on is_fixture."""
-        import inspect
+        numeric drift, not a wrong answer. Pin: ``check_query`` passes
+        one grid step against a live-SQL oracle as 'stale' and fails
+        three."""
+        from pyspark.sql import Row
+        from pyspark.sql.types import DoubleType, StructField, StructType
 
-        src = inspect.getsource(check_oracle.main)
-        assert 'status == "stale" and is_fixture' not in src
-        assert 'if status == "stale":' in src
+        class Frame:
+            columns = ["v"]
+            schema = StructType([StructField("v", DoubleType())])
+
+            def collect(self):
+                return [Row(v=0.232642)]
+
+        def query(spark, sf_dir):
+            return Frame()
+
+        status, detail = check_oracle.check_query(
+            None, sf_dir, "q", query, "SELECT CAST(0.232643 AS DOUBLE) AS v")
+        assert status == "stale" and "knife-edge" in detail
+        status, _ = check_oracle.check_query(
+            None, sf_dir, "q", query, "SELECT CAST(0.232645 AS DOUBLE) AS v")
+        assert status == "fail"
 
     def test_versions_note_mentions_drift_or_match(self):
         note = check_oracle._versions_note()

@@ -1,45 +1,61 @@
-"""Driver-contract smoke: every declared query executes at sf0.001 and
-every declared oracle parses in DuckDB — cheap insurance against
-registry typos before the driver's real gate runs."""
+"""The oracle gate: every declared query, collected at sf0.001, matches
+its DuckDB oracle through the one shared check (tools/check_oracle.py
+``check_query``), and a slice of float-aggregating queries still matches
+when every parquet scan is split into 7 partitions."""
 
 from __future__ import annotations
 
-import duckdb
+import os
+import sys
+
 import pytest
+from pyspark.sql.readwriter import DataFrameReader
 
 import __spark_entry__ as entry
 
+HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(HERE, "tools"))
+
+from check_oracle import _duck_connect, check_query  # noqa: E402
+
 QUERIES, ORACLES = entry._registry()
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
+
+# Queries whose float results come out of aggregations (sums, means,
+# stddevs, medians, windowed metrics) over a plain parquet scan: the
+# class whose values can move with the partition count, as
+# profile_diff's constant-column stddev did at 4 partitions
+# (doc_profile_drift aggregates its profiles eagerly, at construction).
+# Scans behind read_fanned's hash fan-out are not listed: Catalyst
+# collapses the extra repartition into the fan-out's own.
+FLOAT_AGGREGATING = [
+    "auc_two_level", "cardiac_summary_rollup", "doc_mixture_sample",
+    "doc_profile_drift", "doc_temperature_mixture",
+    "doc_token_budget_rate", "eda_quality_segments",
+    "eda_rolling_features", "eda_summary_rollup",
+    "embedding_label_centroids", "kernel_acc_auc", "pricing_summary",
+    "seconds_hr_context", "sqa_missing_segments", "sqa_rolling_metrics",
+    "top_revenue_nations",
 ]
-
-
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * "
-            f"FROM read_parquet('{sf_dir}/{t}.parquet')")
-    return con
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_runs(spark, sf_dir, name):
-    df = QUERIES[name](spark, sf_dir)
-    assert df.count() >= 0
-    assert len(df.columns) > 0
+    status, detail = check_query(spark, sf_dir, name, QUERIES[name],
+                                 ORACLES[name])
+    assert status in ("ok", "stale"), f"{name}: {detail}"
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
-def test_oracle_parses(duck, name):
-    duck.execute(f"EXPLAIN {ORACLES[name]}")
+def test_oracle_parses(sf_dir, name):
+    con = _duck_connect(sf_dir)
+    try:
+        con.execute(f"EXPLAIN {ORACLES[name]}")
+    finally:
+        con.close()
 
 
 def test_every_oracle_has_a_query():
-    assert set(ORACLES) <= set(QUERIES)
+    assert set(ORACLES) == set(QUERIES)
 
 
 def test_entry_returns_flagship(spark):
@@ -47,258 +63,12 @@ def test_entry_returns_flagship(spark):
     assert df.count() > 0
 
 
-def test_rotation_consistent():
-    """The mechanically-derived serve order must (a) resolve every
-    _CHANGED_IN_ROUND name (catches typos when the map is edited),
-    (b) lead with the still-unattested changed queries inside the
-    driver's 50-query window (an entry whose last green row is at or
-    after its edit round is inert — the self-cleaning contract), and
-    (c) place least-recently-verified queries before more-recently-
-    verified ones."""
-    import __spark_entry__ as e
-
-    qs, oracles = e._registry()
-    names = list(qs)
-    assert len(names) == len(set(names))
-    missing = [n for n in e._CHANGED_IN_ROUND if n not in qs]
-    assert not missing, f"_CHANGED_IN_ROUND names not in registry: {missing}"
-    last = e._last_verified()
-    active = [n for n, edited in e._CHANGED_IN_ROUND.items()
-              if n in qs and last.get(n, 0) < edited]
-    assert len(active) <= 50
-    assert names[:len(active)] == active
-    # after the changed block, last-verified round is non-decreasing
-    tail = names[len(active):]
-    rounds = [last.get(n, 0) for n in tail]
-    assert rounds == sorted(rounds)
-    # the CORRECTNESS files in the tree actually parsed (the rotation is
-    # meaningless if the mechanical derivation silently saw nothing)
-    assert last and max(last.values()) >= 6
-    # oracles reference registered queries only
-    assert set(oracles) <= set(qs)
-
-
-def test_rotation_ledger_block():
-    """SURVEY §7.5's rotation paragraph is TOOL OUTPUT, not hand
-    arithmetic (VERDICT r11 item 2 — the hand-derived decomposition
-    miscounted three rounds running). The committed block must equal a
-    recomputation at the data horizon it names; hand edits, stale
-    registry state, or a forgotten regeneration after a registry change
-    all fail here."""
-    import os
-    import re
-    import sys
-
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(here, "tools"))
-    from rotation_report import rotation_report
-
-    survey = open(os.path.join(here, "SURVEY.md")).read()
-    blocks = re.findall(
-        r"<!-- rotation-report:begin.*?rotation-report:end -->",
-        survey, re.S)
-    assert blocks, "SURVEY.md lost its rotation-report block"
-    for block in blocks:
-        m = re.search(r"CORRECTNESS data through r(\d+)", block)
-        assert m, "block does not name its data horizon"
-        assert block == rotation_report(int(m.group(1))), (
-            f"SURVEY rotation block (data through r{m.group(1)}) does "
-            "not match recomputation — regenerate with `python tools/"
-            f"rotation_report.py {m.group(1)}` and paste verbatim. If "
-            "this is an OLD round's block demoted to 'previous state, "
-            "kept for context' after a registry change, strip its "
-            "begin/end marker comments instead (a retired/added query "
-            "makes a past horizon unreproducible by design).")
-
-
-def test_rotation_report_horizon_invariance(tmp_path, monkeypatch):
-    """VERDICT r12 item 1: a report at horizon N must be byte-identical
-    whether or not CORRECTNESS files from rounds > N exist on disk.
-    r12 shipped the exact failure: the histogram half honored ``upto``
-    while the `_serve_order` half did not, so the committed 'through
-    r11' block went stale the moment the driver wrote
-    CORRECTNESS_r12.json. Recompute the r11 report against a tmp tree
-    holding ONLY rounds <= 11 (plus a fabricated future r99 file in a
-    second pass) and require all three readings to agree."""
-    import glob
-    import json
-    import os
-    import re
-    import shutil
-    import sys
-
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(here, "tools"))
-    import __spark_entry__ as e
-    from rotation_report import rotation_report
-
-    with_later_files = rotation_report(11)
-
-    copied = 0
-    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if m and int(m.group(1)) <= 11:
-            shutil.copy(path, tmp_path / os.path.basename(path))
-            copied += 1
-    assert copied >= 3  # the rotation is meaningless on an empty tree
-    # _last_verified globs next to __spark_entry__.__file__; repoint it
-    monkeypatch.setattr(e, "__file__", str(tmp_path / "__spark_entry__.py"))
-    assert rotation_report(11) == with_later_files
-
-    # and with a FUTURE round's file present, the capped report is
-    # still unchanged (the r12 defect reproduced exactly here)
-    (tmp_path / "CORRECTNESS_r99.json").write_text(json.dumps({
-        q: {"rows_match": True, "schema_match": True, "hash_match": True,
-            "spark_rows": 1, "oracle_rows": 1, "err": None}
-        for q in list(e._registry()[0])[:60]}))
-    assert rotation_report(11) == with_later_files
-
-
-def test_rotation_report_classification(monkeypatch):
-    """The tool's changed-entry classification drives next rounds'
-    ledgers; exercise all four branches (inert / active-with-cost /
-    active-without-cost / retired) with a synthetic map so a future
-    edit cannot silently misclassify."""
-    import os
-    import sys
-
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(here, "tools"))
-    import __spark_entry__ as e
-    from rotation_report import rotation_report
-
-    last = e._last_verified(upto=11)
-    names = sorted(e._registry()[0])
-    by_tier = sorted(names, key=lambda q: (last.get(q, 0), q))
-    stale, fresh = by_tier[1], by_tier[-1]  # [0] is the never-verified
-    assert last.get(fresh, 0) == 11
-    monkeypatch.setattr(e, "_CHANGED_IN_ROUND", {
-        stale: 12,                  # active; inside window by staleness
-        fresh: 12,                  # active; would NOT be served -> cost
-        by_tier[2]: last.get(by_tier[2], 0),  # inert: green attests edit
-        "a_retired_query": 9,       # not in the registry any more
-    })
-    report = rotation_report(11)
-    assert f"{stale}: edited r12 — active, NO window cost" in report
-    assert f"{fresh}: edited r12 — active, costs one window slot" in report
-    assert f"{by_tier[2]}: edited r{last.get(by_tier[2], 0):02d} — inert" \
-        in report
-    assert "a_retired_query: edited r09 — RETIRED" in report
-    # active entries lead the predicted window
-    window_line = [ln for ln in report.splitlines()
-                   if ln.startswith("r12 window")][0]
-    assert "50 slots" in window_line
-
-
-def test_changed_queries_docstring_stripping():
-    """A docstring-only reword must NOT read as a behavioral change —
-    docstrings are AST nodes (plain ast.dump equality fails) but never
-    affect computation, so a prior green still attests the bytes (r14:
-    a hamming_banded_pairs docstring note would otherwise re-attest all
-    five reachers). A real code change must still differ after
-    stripping."""
-    import ast
-    import os
-    import sys
-
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(here, "tools"))
-    from changed_queries import _strip_docstrings
-
-    def norm(src):
-        return ast.dump(_strip_docstrings(ast.parse(src)))
-
-    old = '"""mod doc."""\ndef f(x):\n    """v1."""\n    return x + 1\n'
-    doc = '"""mod doc v2."""\ndef f(x):\n    """v2, longer."""\n    return x + 1\n'
-    beh = '"""mod doc."""\ndef f(x):\n    """v1."""\n    return x + 2\n'
-    only_doc = 'def g():\n    """docstring-only body."""\n'
-    assert norm(old) == norm(doc)          # doc reword -> DOC-ONLY
-    assert norm(old) != norm(beh)          # code change stays visible
-    assert ast.dump(ast.parse(old)) != ast.dump(ast.parse(doc))
-    norm(only_doc)                         # empty body gets a Pass, no crash
-
-
-def test_changed_queries_reachability_ground_truth():
-    """tools/changed_queries.py mechanizes the _CHANGED_IN_ROUND audit
-    at function granularity. Pin its name-level reachability against
-    the two r11 ground truths the discipline was actually practiced on
-    (the hamming_banded_pairs gear edit re-attested exactly the
-    near-dup queries; the token_count clamp exactly the three mixture
-    queries) plus the r12 facts (export.py reaches no declared query).
-    A refactor that changes these sets must update the ledger too."""
-    import os
-    import sys
-
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(here, "tools"))
-    from changed_queries import _Analyzer, query_reach
-
-    an = _Analyzer()
-    reach = query_reach(an)
-
-    def who_reaches(mod, name):
-        return {q for q, pairs in reach.items() if (mod, name) in pairs}
-
-    # (curation v3 dropped its token_count pass in r18 — it reuses the
-    # n_tokens column quality_score already computes, so token_count no
-    # longer reaches it)
-    assert who_reaches("physioview_spark.llm.text", "token_count") == {
-        "doc_temperature_mixture", "doc_mixture_sample"}
-    assert who_reaches(
-        "physioview_spark.llm.dedup", "hamming_banded_pairs") == {
-        "doc_simhash_near_dups", "multimodal_image_near_dups",
-        "multimodal_audio_near_dups", "multimodal_blocks_near_dups",
-        "multimodal_image_dedup_decisions"}
-    # (finer than the module-level intuition: order_value_interp uses
-    # interp_join — K22 — not asof_join, and the tool knows)
-    assert who_reaches("physioview_spark.operators.asof", "asof_join") == {
-        "asof_latest_order", "asof_tolerance_match", "beat_edits_applied",
-        "e4_ingest_aligned"}
-    assert "order_value_interp" in who_reaches(
-        "physioview_spark.operators.asof", "interp_join")
-    # the export sink is driver-side-only: NO declared query reaches it
-    assert not any("sources.export" in m
-                   for pairs in reach.values() for m, _ in pairs)
-    # cvxEDA is reached only by the SCR kernel query
-    cvx = {q for q, pairs in reach.items()
-           if any(m == "physioview_spark.functions.cvxeda" for m, _ in pairs)}
-    assert cvx == {"kernel_eda_scr"}
-
-
-def test_changed_queries_stale_entry_rule():
-    """The attestation gate must fail on STALE entries, not just
-    missing ones (VERDICT r18 item 2): the diff base is the last
-    driver-verified state, so a query reached by a behavioral change
-    needs an entry ABOVE its last driver-green round — an entry at or
-    below it is inert in _serve_order (the query never re-enters the
-    driver window) and the changed bytes ship unverified. Until r19
-    seven r18-changed queries rode inert r17 entries past the sample
-    this way."""
-    import os
-    import sys
-
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(here, "tools"))
-    from changed_queries import entry_status
-
-    declared = {"q_stale", "q_active", "q_missing", "q_new"}
-    last = {"q_stale": 17, "q_active": 17, "q_missing": 17}
-
-    # entry round == last green round -> inert -> gate must fail
-    status, bad = entry_status("q_stale", declared, last, {"q_stale": 17})
-    assert bad and "STALE" in status
-    # entry round below last green -> also inert -> fail
-    _, bad = entry_status("q_stale", declared, last, {"q_stale": 16})
-    assert bad
-    # entry round above last green -> active -> pass
-    status, bad = entry_status("q_active", declared, last, {"q_active": 18})
-    assert not bad and "PRESENT" in status
-    # no entry at all -> fail (the pre-r19 rule, still enforced)
-    status, bad = entry_status("q_missing", declared, last, {})
-    assert bad and "MISSING" in status
-    # never driver-verified -> no entry needed (rotation serves it first)
-    _, bad = entry_status("q_new", declared, last, {})
-    assert not bad
-    # retired -> no entry needed
-    _, bad = entry_status("q_retired", declared, last, {})
-    assert not bad
+@pytest.mark.parametrize("name", FLOAT_AGGREGATING)
+def test_partition_count_invariance(spark, sf_dir, name, monkeypatch):
+    parquet = DataFrameReader.parquet
+    monkeypatch.setattr(
+        DataFrameReader, "parquet",
+        lambda self, *paths, **kw: parquet(self, *paths, **kw).repartition(7))
+    status, detail = check_query(spark, sf_dir, name, QUERIES[name],
+                                 ORACLES[name])
+    assert status in ("ok", "stale"), f"{name} at 7 scan partitions: {detail}"

@@ -32,12 +32,11 @@ import sys
 HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 
-SUMMARY_RE = re.compile(
-    r"(\d+) ok, (\d+) rows-only, (\d+) stale, (\d+) FAIL")
+SUMMARY_RE = re.compile(r"(\d+) ok, (\d+) stale, (\d+) FAIL")
 
 
 def run_axis(name: str, sf_dir: str, queries: list[str]) -> tuple:
-    """(name, ok, rows_only, stale, fail, tail) for one corpus."""
+    """(name, ok, stale, fail, tail) for one corpus."""
     proc = subprocess.run(
         [sys.executable, os.path.join(HERE, "check_oracle.py"),
          sf_dir, *queries],
@@ -47,7 +46,7 @@ def run_axis(name: str, sf_dir: str, queries: list[str]) -> tuple:
     for m in SUMMARY_RE.finditer(out):
         pass  # keep the LAST summary line
     if m is None:
-        return (name, 0, 0, 0, -1,
+        return (name, 0, 0, -1,
                 "\n".join(out.splitlines()[-15:]))
     fails = "\n".join(
         line for line in out.splitlines() if line.startswith("FAIL"))
@@ -80,12 +79,12 @@ def main() -> None:
     for name, d in axes.items():
         r = run_axis(name, d, queries)
         results.append(r)
-        n_ok, n_rows, n_stale, n_fail = r[1:5]
+        n_ok, n_stale, n_fail = r[1:4]
         status = "OK" if n_fail == 0 else "FAIL"
-        print(f"{name:6s} {status:4s} {n_ok} ok / {n_rows} rows-only / "
-              f"{n_stale} stale / {n_fail} FAIL   [{d}]")
+        print(f"{name:6s} {status:4s} {n_ok} ok / {n_stale} stale / "
+              f"{n_fail} FAIL   [{d}]")
         if n_fail:
-            print(r[5])
+            print(r[4])
         total_fail += max(n_fail, 0) + (1 if n_fail < 0 else 0)
     sys.exit(1 if total_fail else 0)
 

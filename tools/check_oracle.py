@@ -1,8 +1,10 @@
-"""Local replica of the driver's correctness gate.
+"""The oracle gate: every declared query against its DuckDB oracle.
 
-Runs every declared query through Spark AND its DuckDB oracle on the same
-parquet tables, then compares row count, column names, and an
-order-insensitive value comparison. Usage:
+Runs each declared query through Spark AND its DuckDB oracle on the same
+parquet tables, then compares column names, row count, and an
+order-insensitive value comparison (:func:`check_query`). Tier-1 runs
+the same check per query (tests/test_registry_smoke.py); this script
+sweeps it over any corpus. Usage:
 
     python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -166,10 +168,11 @@ def _duck_connect(sf_dir: str):
     quiet-machine memory note records). A per-query connection bounds
     DuckDB state at one query's working set, and the explicit limits
     keep the oracle side from competing with the Spark driver for the
-    container's memory."""
+    container's memory: one thread per core this process may run on,
+    the rule ``get_spark`` sizes ``local[N]`` by."""
     con = duckdb.connect()
     con.execute("SET memory_limit='16GB'")
-    con.execute("SET threads=16")
+    con.execute(f"SET threads={len(os.sched_getaffinity(0))}")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
@@ -177,103 +180,88 @@ def _duck_connect(sf_dir: str):
     return con
 
 
+def check_query(spark, sf_dir: str, name: str, fn, sql: str):
+    """('ok'|'stale'|'fail', detail): declared query ``fn`` against its
+    DuckDB oracle ``sql`` on the tables in ``sf_dir`` — column set, row
+    count, then :func:`compare_values`. 'stale' is numeric-only drift
+    (see :func:`compare_values`): a pass, with a diagnosis in
+    ``detail``."""
+    from physioview_spark import cache
+    from physioview_spark.plans.common import FIXTURE_DIR
+
+    # operator-internal pins accumulate across a 101-query sweep (JVM
+    # storage blocks on a 1 GiB default heap) — release the previous
+    # query's before building the next
+    cache.release_pinned()
+    try:
+        sdf = fn(spark, sf_dir)
+        scols = sdf.columns
+        bad = complex_cols(sdf.schema)
+        if bad:
+            return "fail", (
+                f"complex-typed declared columns {bad} — the driver's "
+                f"pandas canonicalizer cannot sort list/struct cells; "
+                f"posexplode/flatten before declaring")
+        srows = [row.asDict() for row in sdf.collect()]
+    except Exception as ex:
+        return "fail", f"spark error: {ex}"
+    try:
+        con = _duck_connect(sf_dir)
+        try:
+            ddf = con.execute(sql).fetch_arrow_table()
+        finally:
+            con.close()
+    except Exception as ex:
+        return "fail", f"duckdb error: {ex}"
+    dcols = ddf.column_names
+    drows = ddf.to_pylist()
+    if set(scols) != set(dcols):
+        return "fail", f"cols spark={sorted(scols)} duck={sorted(dcols)}"
+    if len(srows) != len(drows):
+        return "fail", f"rowcount spark={len(srows)} duck={len(drows)}"
+    status, detail = compare_values(srows, scols, drows, dcols)
+    if status == "ok":
+        return "ok", f"{len(srows)} rows"
+    if status == "fail":
+        return "fail", detail
+    if FIXTURE_DIR in sql:
+        # numeric-only drift on a PINNED fixture: not a kernel bug —
+        # the fixture predates a library upgrade.
+        return "stale", (
+            f"values match within tolerance but differ exactly "
+            f"({_versions_note()}); regenerate with `python "
+            f"tools/make_fixture_oracles.py {name}`")
+    # VERDICT r17 item 3: a computed oracle on a 6-decimal rounding
+    # knife-edge (1-ulp cross-engine float drift, e.g. perm_entropy on
+    # the null axis) is numeric drift too, not a wrong answer.
+    return "stale", (
+        "knife-edge — every value matches within (rel 1e-6, abs 1e-9) "
+        "but an exact 6-decimal compare differs (cross-engine float ulp "
+        "at a rounding boundary), not a kernel bug")
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
     import __spark_entry__ as e
-    from physioview_spark import cache
     from physioview_spark.session import get_spark
 
     spark = get_spark("oracle-check")
 
-    qs = e.queries()
     oracles = e.oracle_sql()
-    n_pass = n_fail = n_rowsonly = n_stale = 0
-    for name, fn in qs.items():
+    counts = {"ok": 0, "stale": 0, "fail": 0}
+    for name, fn in e.queries().items():
         if only and name not in only:
             continue
         t0 = time.time()
-        # operator-internal pins accumulate across a 101-query sweep
-        # (JVM storage blocks on a 1 GiB default heap) — release the
-        # previous query's before building the next
-        cache.release_pinned()
-        try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            bad = complex_cols(sdf.schema)
-            if bad:
-                print(f"FAIL  {name}: complex-typed declared columns "
-                      f"{bad} — the driver's pandas canonicalizer cannot "
-                      f"sort list/struct cells; posexplode/flatten before "
-                      f"declaring")
-                n_fail += 1
-                continue
-            srows = [row.asDict() for row in sdf.collect()]
-        except Exception as ex:
-            print(f"FAIL  {name}: spark error: {ex}")
-            n_fail += 1
-            continue
-        if name not in oracles:
-            print(f"rows  {name}: {len(srows)} rows (no oracle) "
-                  f"[{time.time()-t0:.1f}s]")
-            n_rowsonly += 1
-            continue
-        try:
-            con = _duck_connect(sf_dir)
-            try:
-                ddf = con.execute(oracles[name]).fetch_arrow_table()
-            finally:
-                con.close()
-        except Exception as ex:
-            print(f"FAIL  {name}: duckdb error: {ex}")
-            n_fail += 1
-            continue
-        dcols = ddf.column_names
-        drows = ddf.to_pylist()
-        from physioview_spark.plans.common import FIXTURE_DIR
-        is_fixture = FIXTURE_DIR in oracles[name]
-        problems = []
-        stale = False
-        if set(scols) != set(dcols):
-            problems.append(f"cols spark={sorted(scols)} duck={sorted(dcols)}")
-        elif len(srows) != len(drows):
-            problems.append(f"rowcount spark={len(srows)} duck={len(drows)}")
-        else:
-            status, detail = compare_values(srows, scols, drows, dcols)
-            if status == "stale":
-                # VERDICT r17 item 3: the paired-tolerance re-check now
-                # classifies COMPUTED oracles too — a value sitting on a
-                # 6-decimal rounding knife-edge (1-ulp cross-engine
-                # float drift, e.g. perm_entropy on the null axis) is
-                # numeric drift, not a wrong answer, regardless of
-                # whether the oracle is a pinned fixture or live SQL.
-                stale = True
-            elif status != "ok":
-                problems.append(detail)
-        if stale:
-            if is_fixture:
-                # numeric-only drift on a PINNED fixture: not a kernel
-                # bug — the fixture predates a library upgrade.
-                print(f"STALE {name}: values match within tolerance but "
-                      f"differ exactly ({_versions_note()}); regenerate "
-                      f"with `python tools/make_fixture_oracles.py "
-                      f"{name}`")
-            else:
-                print(f"STALE {name}: knife-edge — every value matches "
-                      f"within (rel 1e-6, abs 1e-9) but an exact "
-                      f"6-decimal compare differs (cross-engine float "
-                      f"ulp at a rounding boundary), not a kernel bug")
-            n_stale += 1
-        elif problems:
-            print(f"FAIL  {name}: {'; '.join(problems)}")
-            n_fail += 1
-        else:
-            print(f"ok    {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")
-            n_pass += 1
-    print(f"\n{n_pass} ok, {n_rowsonly} rows-only, {n_stale} stale, "
-          f"{n_fail} FAIL")
-    sys.exit(1 if n_fail else 0)
+        status, detail = check_query(spark, sf_dir, name, fn, oracles[name])
+        counts[status] += 1
+        print(f"{status.upper() if status != 'ok' else status:5s} {name}: "
+              f"{detail} [{time.time() - t0:.1f}s]")
+    print(f"\n{counts['ok']} ok, {counts['stale']} stale, "
+          f"{counts['fail']} FAIL")
+    sys.exit(1 if counts["fail"] else 0)
 
 
 if __name__ == "__main__":

@@ -3,8 +3,7 @@
 Every round the judge hand-audits the physical plans of the declared
 queries for scale killers: per-row Python UDFs (BatchEvalPython),
 CartesianProduct nodes, and silent extra shuffles. r13 pins that sweep
-the same way rotation_report.py pinned the rotation arithmetic: this
-tool renders the pre-execution physical plan of every declared query at
+as tool output: this tool renders the pre-execution physical plan of every declared query at
 the test scale factor and writes a census of the scale-relevant node
 counts to ``tools/plan_census.json``;
 tests/test_plan_census.py recomputes the census and fails on any drift,
